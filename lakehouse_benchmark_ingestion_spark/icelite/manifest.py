@@ -7,14 +7,15 @@ file pruning (SURVEY.md §2.3 J1) and compaction planning.
 
 Stats are harvested from the Parquet footers the executors already wrote
 (zero extra data scan — the stats were computed by the columnar writer, i.e.
-vectorized, never per-row Python). For very large commits the footer reads
-are threaded; at true cluster scale the same harvest can run as a
-``spark.read.parquet(...).groupBy(_metadata.file_path)`` job — the manifest
-schema is identical either way.
+vectorized, never per-row Python). The footer reads are threaded; for very
+large commits the same ``harvest_stats`` runs on the executors over
+partitions of the path list (``harvest_stats_distributed``).
 """
 
 from __future__ import annotations
 
+import functools
+import math
 import os
 import uuid
 from concurrent.futures import ThreadPoolExecutor
@@ -125,12 +126,6 @@ def _bounds_to_json(b: dict) -> str:
     return json.dumps(b, default=str, sort_keys=True)
 
 
-def _bounds_from_json(s: str) -> dict:
-    import json
-
-    return json.loads(s)
-
-
 MANIFEST_SCHEMA = pa.schema(
     [
         pa.field("path", pa.string(), nullable=False),
@@ -210,78 +205,41 @@ def harvest_stats(paths: list[str], stat_columns: list[str] | None = None) -> li
         return list(ex.map(one, paths))
 
 
-# commits touching at least this many files harvest stats as a Spark job
-# instead of driver-side footer reads (harvest_stats_auto)
+# commits touching at least this many files harvest stats on the executors
+# instead of the driver (harvest_stats_auto)
 DISTRIBUTED_HARVEST_MIN_FILES = 10_000
+
+
+def map_paths(spark, paths: list[str], fn) -> list:
+    """Run ``fn(paths) -> iterable`` over executor partitions of ``paths``
+    and collect the concatenated results in path order. ``fn`` must be a
+    module-level function, or a ``functools.partial`` of one, so executors
+    import and run their own copy of the driver's code.
+
+    √paths partitions of √paths paths each, never more than the cores:
+    every extra task can cost a cold Python worker start, which outweighs
+    parsing a few files (6 manifests of 1,000 entries on 4 cores, right
+    after a one-task job: 4 tasks 1.07-1.31 s, 2 tasks 0.83-0.96 s)."""
+    sc = spark.sparkContext
+    n = max(1, min(sc.defaultParallelism, math.isqrt(len(paths))))
+    return sc.parallelize(paths, n).mapPartitions(lambda it: fn(list(it))).collect()
+
+
+def _harvest_partition(stat_columns: list[str] | None, paths: list[str]) -> list[DataFile]:
+    # pickled by reference, so the executor resolves ``harvest_stats`` in
+    # its own import of this module, never a driver-side wrapper of it
+    return harvest_stats(paths, stat_columns)
 
 
 def harvest_stats_distributed(
     spark, paths: list[str], stat_columns: list[str] | None = None
 ) -> list[DataFile]:
-    """Stats harvest as a distributed Spark job: one ``groupBy`` over the
-    hidden ``_metadata`` column — min/max/count per file computed by the
-    executors that can already see the data, never serialising file lists
-    through the driver's thread pool. For a 100k-file commit this is the
-    only harvest that scales; output is identical to ``harvest_stats``
-    (unit-tested equivalence)."""
-    from pyspark.sql import functions as F
-    from pyspark.sql import types as T
-
-    df = spark.read.parquet(*paths)
-    wanted = stat_columns
-    if wanted is None:
-        scalar_ok = (
-            T.StringType, T.IntegerType, T.LongType, T.ShortType, T.ByteType,
-            T.FloatType, T.DoubleType, T.BooleanType, T.DateType,
-            T.TimestampType, T.TimestampNTZType, T.DecimalType,
-        )
-        wanted = [
-            f.name for f in df.schema.fields if isinstance(f.dataType, scalar_ok)
-        ][:STATS_MAX_COLS]
-    aggs = [
-        F.count(F.lit(1)).alias("_rc"),
-        F.first(F.col("_metadata.file_size")).alias("_fs"),
-    ]
-    for c in wanted:
-        aggs.append(F.min(F.col(c)).alias(f"_min_{c}"))
-        aggs.append(F.max(F.col(c)).alias(f"_max_{c}"))
-        aggs.append(F.count(F.col(c)).alias(f"_nn_{c}"))  # non-null count
-    rows = (
-        df.groupBy(F.col("_metadata.file_path").alias("_fp"))
-        .agg(*aggs)
-        .collect()
-    )
-    by_path = {}
-    for r in rows:
-        p = r["_fp"]
-        if p.startswith("file:"):
-            p = p[5:]
-            while p.startswith("//"):
-                p = p[1:]
-        by_path[os.path.abspath(p)] = r
-    out: list[DataFile] = []
-    for p in paths:
-        ap = os.path.abspath(p)
-        r = by_path.get(ap)
-        if r is None:  # zero-row file: no group emitted
-            out.append(
-                DataFile(path=ap, file_size_bytes=os.path.getsize(p), record_count=0)
-            )
-            continue
-        lowers = {c: r[f"_min_{c}"] for c in wanted if r[f"_min_{c}"] is not None}
-        uppers = {c: r[f"_max_{c}"] for c in wanted if r[f"_max_{c}"] is not None}
-        nulls = {c: r["_rc"] - r[f"_nn_{c}"] for c in wanted}
-        out.append(
-            DataFile(
-                path=ap,
-                file_size_bytes=r["_fs"],
-                record_count=r["_rc"],
-                lower_bounds=lowers,
-                upper_bounds=uppers,
-                null_counts=nulls,
-            )
-        )
-    return out
+    """``harvest_stats`` mapped over executor partitions of the path list:
+    each executor reads the footers of its share of the files, so a
+    100k-file commit's footer reads are spread over the cluster instead
+    of the driver's thread pool. Output equals ``harvest_stats`` field by
+    field (same function, same order)."""
+    return map_paths(spark, paths, functools.partial(_harvest_partition, stat_columns))
 
 
 def harvest_stats_auto(
@@ -289,8 +247,9 @@ def harvest_stats_auto(
     stat_columns: list[str] | None = None,
     spark=None,
 ) -> list[DataFile]:
-    """Footer harvest for normal commits; the distributed job for huge ones
-    (>= DISTRIBUTED_HARVEST_MIN_FILES files and a session to run it)."""
+    """Footer harvest on the driver for normal commits; on the executors
+    for huge ones (>= DISTRIBUTED_HARVEST_MIN_FILES files and a session to
+    run it)."""
     if spark is not None and len(paths) >= DISTRIBUTED_HARVEST_MIN_FILES:
         return harvest_stats_distributed(spark, paths, stat_columns)
     return harvest_stats(paths, stat_columns)
@@ -443,7 +402,10 @@ def _parse_manifest(path: str) -> list[DataFile]:
     handing entries to callers."""
     import json
 
-    table = pq.read_table(path)
+    # ParquetFile, not read_table: read_table's first call imports the
+    # dataset layer (~0.4 s), which every fresh executor worker would pay
+    with pq.ParquetFile(path) as pf:
+        table = pf.read()
     n = table.num_rows
     names = set(table.column_names)
 

@@ -11,13 +11,15 @@ ids resolve to the old file list, north_rule).
 
 from __future__ import annotations
 
+import functools
 import glob
 import json
 import os
 import shutil
 import uuid
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import functions as F
 from pyspark.sql.types import LongType, StringType, StructField, StructType
 
 from . import manifest as mf
@@ -36,6 +38,45 @@ POS_DELETE_BROADCAST_BYTES = 256 * 1024 * 1024
 ROW_LINEAGE_PROP = "row-lineage.enabled"
 LINEAGE_ROW_ID_COL = "_row_id"
 LINEAGE_SEQ_COL = "_last_updated_sequence_number"
+
+
+def predicate_column(where: dict) -> Column:
+    """The exact row-level Column for a ``where`` dict (AND of conditions)."""
+    pred = F.lit(True)
+    for col, cond in where.items():
+        if isinstance(cond, tuple):
+            lo, hi = cond
+            if lo is not None:
+                pred = pred & (F.col(col) >= lo)
+            if hi is not None:
+                pred = pred & (F.col(col) <= hi)
+        else:
+            pred = pred & (F.col(col) == cond)
+    return pred
+
+
+def _file_fully_matches(f: mf.DataFile, where: dict) -> bool:
+    """True iff stats PROVE every row of the file satisfies the predicate:
+    for each condition the file's [min,max] lies inside the predicate
+    interval and the column's null count is known to be zero."""
+    for col, cond in where.items():
+        lo = f.lower_bounds.get(col)
+        hi = f.upper_bounds.get(col)
+        if lo is None or hi is None:
+            return False
+        if f.null_counts.get(col) != 0:  # unknown (None) or > 0 → unsound
+            return False
+        plo, phi = cond if isinstance(cond, tuple) else (cond, cond)
+        try:
+            if plo is not None and lo < plo:
+                return False
+            if phi is not None and hi > phi:
+                return False
+            if plo is None and phi is None:
+                continue
+        except TypeError:
+            return False
+    return True
 
 
 class IceliteTable:
@@ -369,23 +410,31 @@ class IceliteTable:
         snap = self.meta.snapshot(snapshot_id)
         if snap is None:
             return [], {"manifests_total": 0, "manifests_read": 0}
-        ppred = self._partition_predicate(where)
-        files: list[mf.DataFile] = []
-        read = 0
-        for name in snap.manifests:
-            summary = mf.read_manifest_summary(self.location, name)
-            if summary is not None and self._summary_prunable(summary, where, ppred):
-                continue
-            read += 1
-            files.extend(
-                f
-                for f in mf.read_manifest(self.location, name)
-                if f.content == mf.CONTENT_DATA
-            )
+        names = self._manifests_to_read(snap, where)
+        files = [
+            f
+            for name in names
+            for f in mf.read_manifest(self.location, name)
+            if f.content == mf.CONTENT_DATA
+        ]
         return files, {
             "manifests_total": len(snap.manifests),
-            "manifests_read": read,
+            "manifests_read": len(names),
         }
+
+    def _manifests_to_read(self, snap: md.Snapshot, where: dict | None) -> list[str]:
+        """The snapshot's manifests whose footer summary cannot rule out
+        ``where`` — the bodies both planners must parse. Manifests written
+        before summaries existed are always read."""
+        if not where:
+            return list(snap.manifests)
+        ppred = self._partition_predicate(where)
+        names = []
+        for name in snap.manifests:
+            summary = mf.read_manifest_summary(self.location, name)
+            if summary is None or not self._summary_prunable(summary, where, ppred):
+                names.append(name)
+        return names
 
     def delete_files(self, snapshot_id: int | None = None) -> list[mf.DataFile]:
         return [f for f in self.all_files(snapshot_id) if f.content == mf.CONTENT_EQ_DELETES]
@@ -668,8 +717,6 @@ class IceliteTable:
         extra columns (POS_PATH_COL = manifest-form file path, POS_IDX_COL =
         row index within the file) from Spark's ``_metadata`` struct — the
         coordinates position-delete files speak (icelite v2 parity)."""
-        from pyspark.sql import functions as F
-
         schema = self.schema
         cols = [f.name for f in schema.fields]
         if with_positions:
@@ -718,8 +765,6 @@ class IceliteTable:
         expansion in icelite/dv.py), broadcast when the expanded size fits
         — the address set both ``pos_reader`` and lineage reads anti-join
         against."""
-        from pyspark.sql import functions as F
-
         from . import dv as _dv
 
         dels = _dv.sidecar_addresses(spark, pos_dels).distinct()
@@ -766,7 +811,6 @@ class IceliteTable:
             from functools import reduce
 
             from pyspark.sql import DataFrame as _DF
-            from pyspark.sql import functions as F
 
             hit = [p for p in paths if _addressable(p)]
             clean = [p for p in paths if p not in set(hit)]
@@ -869,8 +913,6 @@ class IceliteTable:
         olds = self.meta.column_aliases.get(key, [])
 
         def read(paths: list[str]) -> DataFrame:
-            from pyspark.sql import functions as F
-
             if not olds:
                 return spark.read.schema(
                     StructType([StructField(key, key_field.dataType, True)])
@@ -1399,108 +1441,31 @@ class IceliteTable:
         snapshot_id: int | None = None,
         file_filter=None,
     ) -> list[mf.DataFile]:
-        """Scan planning with the manifest-parsing work pushed to
-        EXECUTORS — the scale path past ~10^7 files, where even one
-        driver-side pass over the manifests (a measured ~23 s per 10^6
-        entries, tools/plan_scale_bench.py) turns into minutes (Iceberg's
+        """Scan planning with the manifest-body parse pushed to EXECUTORS —
+        the scale path past ~10^7 files, where even one driver-side pass
+        over the manifests (a measured ~23 s per 10^6 entries,
+        tools/plan_scale_bench.py) turns into minutes (Iceberg's
         equivalent: distributed planning in the Spark action).
 
-        Three stages, each conservative so the result equals
-        ``select_data_files`` exactly:
-
-          1. driver, cheap: footer-summary two-level pruning picks the
-             manifest BODIES worth reading (identical to
-             ``plan_data_files``);
-          2. executors: the surviving manifests — already Parquet — are
-             read as ONE Spark job; per-file min/max stats prune
-             distributed (numeric predicates compare via double casts,
-             which is sound: round-to-nearest is monotone, so an exact
-             ``hi >= lo`` can never invert; string predicates compare in
-             string order exactly like the driver; null/incomparable
-             stats keep the file);
-          3. driver: ONLY the surviving entries come back, and the same
-             ``_post_plan_filters`` chain (exact stats compare, partition
-             transforms, bloom sidecars) runs on them — so any file the
-             distributed pass conservatively kept is re-judged by the
-             exact driver logic.
-        """
-        from pyspark.sql import functions as F
-
+        The driver picks the manifest bodies worth reading from their
+        footer summaries (``_manifests_to_read``, shared with
+        ``plan_data_files``); executors run the driver's own parse
+        (``mf._parse_manifest``) and per-file stats filter
+        (``_where_file_filter``) over them, so only data-file survivors
+        come back; the driver then applies the shared
+        ``_post_plan_filters`` chain. Every step is the driver planner's
+        own code, so the result equals ``select_data_files`` by
+        construction."""
         snap = self.meta.snapshot(snapshot_id)
         if snap is None:
             return []
-        ppred = self._partition_predicate(where) if where else None
-        bodies = []
-        for name in snap.manifests:
-            if where:
-                summary = mf.read_manifest_summary(self.location, name)
-                if summary is not None and self._summary_prunable(
-                    summary, where, ppred
-                ):
-                    continue
-            bodies.append(os.path.join(mf.metadata_dir(self.location), name))
+        mdir = md.metadata_dir(self.location)
+        bodies = [os.path.join(mdir, n) for n in self._manifests_to_read(snap, where)]
         if not bodies:
             return []
-
-        mdf = spark.read.schema(
-            "path string, file_size_bytes long, record_count long, "
-            "lower_bounds_json string, upper_bounds_json string, "
-            "null_counts_json string, content string, "
-            "sequence_number long, bucket long, partition_json string, "
-            "sort_order string, delete_format string, first_row_id long, "
-            "lineage string"
-        ).parquet(*bodies)
-        cond_expr = F.col("content") == mf.CONTENT_DATA
-        for col, cond in (where or {}).items():
-            plo, phi = cond if isinstance(cond, tuple) else (cond, cond)
-            vals = [v for v in (plo, phi) if v is not None]
-            if not vals:
-                continue
-            lo_s = F.get_json_object(F.col("lower_bounds_json"), f"$.{col}")
-            hi_s = F.get_json_object(F.col("upper_bounds_json"), f"$.{col}")
-            if all(isinstance(v, (int, float)) and not isinstance(v, bool)
-                   for v in vals):
-                lo_c, hi_c = (
-                    lo_s.try_cast("double"), hi_s.try_cast("double"),
-                )
-                plo_c = F.lit(float(plo)) if plo is not None else None
-                phi_c = F.lit(float(phi)) if phi is not None else None
-            elif all(isinstance(v, str) for v in vals):
-                lo_c, hi_c = lo_s, hi_s
-                plo_c = F.lit(plo) if plo is not None else None
-                phi_c = F.lit(phi) if phi is not None else None
-            else:
-                continue  # mixed/unsupported type — stage 3 decides
-            prune = F.lit(False)
-            if plo_c is not None:
-                prune = prune | (hi_c < plo_c)
-            if phi_c is not None:
-                prune = prune | (lo_c > phi_c)
-            # NULL stats / failed casts ⇒ prune is NULL ⇒ keep (same
-            # conservative contract as _where_file_filter)
-            cond_expr = cond_expr & ~F.coalesce(prune, F.lit(False))
-        rows = mdf.filter(cond_expr).collect()
-        files = [
-            mf.DataFile(
-                path=r["path"],
-                file_size_bytes=r["file_size_bytes"],
-                record_count=r["record_count"],
-                lower_bounds=mf._bounds_from_json(r["lower_bounds_json"]),
-                upper_bounds=mf._bounds_from_json(r["upper_bounds_json"]),
-                null_counts=mf._bounds_from_json(
-                    r["null_counts_json"] or "{}"
-                ),
-                content=r["content"],
-                sequence_number=r["sequence_number"] or 0,
-                bucket=r["bucket"] if r["bucket"] is not None else -1,
-                partition_json=r["partition_json"] or "{}",
-                sort_order=r["sort_order"] or "",
-                delete_format=r["delete_format"] or mf.DELETE_FORMAT_ROWS,
-                first_row_id=r["first_row_id"],
-                lineage=r["lineage"] or "",
-            )
-            for r in rows
-        ]
+        files = mf.map_paths(
+            spark, bodies, functools.partial(_parse_and_prune, where or {})
+        )
         return self._post_plan_filters(files, where, snapshot_id, file_filter)
 
     def count_rows(
@@ -1526,8 +1491,6 @@ class IceliteTable:
 
         At 10^12 rows a partition- or range-aligned count is answered from
         the manifest alone — no tasks launched."""
-        from ..operators.row_dml import _file_fully_matches, predicate_column
-
         sid = self.resolve_snapshot(snapshot_id, ref, None)
         if self.delete_files(sid) or self.pos_delete_files(sid):
             n = self.scan(spark, snapshot_id=sid, where=where).count()
@@ -1584,10 +1547,6 @@ class IceliteTable:
         "files_scanned"}`` — mode ``metadata`` means zero rows read, the
         partition- or range-aligned case that answers from the manifest
         alone at 10^12 rows."""
-        from pyspark.sql import functions as F
-
-        from ..operators.row_dml import _file_fully_matches, predicate_column
-
         sid = self.resolve_snapshot(snapshot_id, ref, None)
         if self.delete_files(sid) or self.pos_delete_files(sid):
             row = (
@@ -1686,18 +1645,8 @@ class IceliteTable:
             df = reader([f.path for f in files])
         if where:
             # exact semantics: the file skip is a superset; Catalyst pushes
-            # these row filters into the Parquet reader as well
-            from pyspark.sql import functions as F
-
-            for col, cond in where.items():
-                if isinstance(cond, tuple):
-                    plo, phi = cond
-                    if plo is not None:
-                        df = df.filter(F.col(col) >= plo)
-                    if phi is not None:
-                        df = df.filter(F.col(col) <= phi)
-                else:
-                    df = df.filter(F.col(col) == cond)
+            # the row filter into the Parquet reader as well
+            df = df.filter(predicate_column(where))
         if columns:
             df = df.select(*columns)
         return df
@@ -1721,8 +1670,6 @@ class IceliteTable:
         (enforced at commit time by ``_assign_row_ids``), so live
         eq-deletes only occur when lineage was enabled mid-life on a MOR
         table: compact first."""
-        from pyspark.sql import functions as F
-
         sid = (
             snapshot_id
             if snapshot_id is not None
@@ -1824,20 +1771,18 @@ class IceliteTable:
         """Snapshot-pinned scan exposing ``_row_id`` and
         ``_last_updated_sequence_number`` next to the data columns — the
         v3 lineage surface. File pruning is the shared stack
-        (``select_data_files``); row filters mirror ``scan(where=)``."""
-        from pyspark.sql import functions as F
-
+        (``select_data_files``); the row filter is ``scan``'s."""
         sid = self.resolve_snapshot(snapshot_id, ref, as_of_timestamp_ms)
         files = self.select_data_files(where=where, snapshot_id=sid)
         df = self.lineage_read(spark, files, snapshot_id=sid)
-        if where:
-            for col, cond in where.items():
-                if isinstance(cond, tuple):
-                    plo, phi = cond
-                    if plo is not None:
-                        df = df.filter(F.col(col) >= plo)
-                    if phi is not None:
-                        df = df.filter(F.col(col) <= phi)
-                else:
-                    df = df.filter(F.col(col) == cond)
-        return df
+        return df.filter(predicate_column(where)) if where else df
+
+
+def _parse_and_prune(where: dict, paths: list[str]):
+    """Executor half of ``select_data_files_distributed``: the driver's
+    manifest parse and per-file stats filter over a share of the bodies."""
+    keep = IceliteTable._where_file_filter(where)
+    for path in paths:
+        for f in mf._parse_manifest(path):
+            if f.content == mf.CONTENT_DATA and keep(f):
+                yield f

@@ -139,6 +139,15 @@ import json
 import sys
 
 
+def _parse_where(raw: str | None) -> dict | None:
+    """``--where`` JSON → the engine's ``where`` dict: a JSON list is an
+    inclusive ``(lo, hi)`` range (null = unbounded), anything else an
+    equality."""
+    if not raw:
+        return None
+    return {k: tuple(v) if isinstance(v, list) else v for k, v in json.loads(raw).items()}
+
+
 def main(argv: list[str] | None = None) -> int:
     p = argparse.ArgumentParser(prog="icelite")
     p.add_argument("command")
@@ -271,12 +280,8 @@ def main(argv: list[str] | None = None) -> int:
     elif args.command == "compact":
         from lakehouse_benchmark_ingestion_spark.operators.compaction import compact
 
-        where = None
-        if args.where:  # targeted rewrite_data_files(filter) parity
-            where = {
-                k: tuple(v) if isinstance(v, list) else v
-                for k, v in json.loads(args.where).items()
-            }
+        # targeted rewrite_data_files(filter) parity
+        where = _parse_where(args.where)
         out.update(
             compact(
                 spark,
@@ -339,23 +344,13 @@ def main(argv: list[str] | None = None) -> int:
         )
 
     elif args.command == "count":
-        where = None
-        if args.where:
-            where = {
-                k: tuple(v) if isinstance(v, list) else v
-                for k, v in json.loads(args.where).items()
-            }
+        where = _parse_where(args.where)
         out.update(cat.load_table(args.table).count_rows(spark, where=where))
 
     elif args.command == "minmax":
         if not args.column:
             p.error("minmax requires --column")
-        where = None
-        if args.where:
-            where = {
-                k: tuple(v) if isinstance(v, list) else v
-                for k, v in json.loads(args.where).items()
-            }
+        where = _parse_where(args.where)
         out.update(
             cat.load_table(args.table).agg_minmax(
                 spark, args.column, where=where
@@ -505,10 +500,7 @@ def main(argv: list[str] | None = None) -> int:
 
         if not args.where:
             p.error(f"{args.command} requires --where")
-        where = {
-            k: tuple(v) if isinstance(v, list) else v
-            for k, v in json.loads(args.where).items()
-        }
+        where = _parse_where(args.where)
         tbl = cat.load_table(args.table)
         if args.command == "delete-where":
             out.update(
@@ -728,12 +720,7 @@ def main(argv: list[str] | None = None) -> int:
 
     elif args.command == "scan":
         tbl = cat.load_table(args.table)
-        where = None
-        if args.where:
-            where = {
-                k: tuple(v) if isinstance(v, list) else v
-                for k, v in json.loads(args.where).items()
-            }
+        where = _parse_where(args.where)
         df = tbl.scan(
             spark, snapshot_id=args.snapshot_id, where=where,
             ref=args.ref, as_of_timestamp_ms=args.as_of_ms,
@@ -778,12 +765,7 @@ def main(argv: list[str] | None = None) -> int:
         # v3 row-lineage surface: data columns + _row_id /
         # _last_updated_sequence_number
         tbl = cat.load_table(args.table)
-        where = None
-        if args.where:
-            where = {
-                k: tuple(v) if isinstance(v, list) else v
-                for k, v in json.loads(args.where).items()
-            }
+        where = _parse_where(args.where)
         df = tbl.scan_lineage(
             spark, snapshot_id=args.snapshot_id, where=where, ref=args.ref,
         )

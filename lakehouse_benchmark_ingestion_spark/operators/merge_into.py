@@ -298,7 +298,11 @@ def _merge_cow_lineage(
     both in one commit is safe because id assignment skips materialized
     entries. The read applies position deletes / DVs under the planning
     snapshot (``lineage_read``), so a DV-deleted key re-upserted by the
-    batch correctly becomes an insert with a FRESH id."""
+    batch correctly becomes an insert with a FRESH id.
+
+    A key held by several base rows (the table has no uniqueness
+    constraint) yields ONE updated row, like the plain COW path: it keeps
+    the smallest of those rows' ``_row_id``s and the other ids retire."""
     from ..icelite.table import LINEAGE_ROW_ID_COL, LINEAGE_SEQ_COL
 
     schema = table.schema
@@ -306,7 +310,9 @@ def _merge_cow_lineage(
     matched_data = table.lineage_read(
         spark, [file_by_path[p] for p in matched_paths], snapshot_id=base_sid
     )
-    rid_map = matched_data.select(key, LINEAGE_ROW_ID_COL)
+    rid_map = matched_data.groupBy(key).agg(
+        F.min(LINEAGE_ROW_ID_COL).alias(LINEAGE_ROW_ID_COL)
+    )
     unchanged = matched_data.join(winners_j.select(key), key, "left_anti")
     updated = winners.join(rid_map, key, "inner").select(
         *cols,

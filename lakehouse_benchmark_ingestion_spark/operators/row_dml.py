@@ -37,51 +37,12 @@ import glob
 import os
 import uuid
 
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..icelite import manifest as mf
-from ..icelite.table import IceliteTable
+from ..icelite.table import IceliteTable, _file_fully_matches, predicate_column
 from ..plans.lineage import LineageLog, LineageRow
-
-
-def predicate_column(where: dict) -> Column:
-    """The exact row-level Column for a ``where`` dict (AND of conditions)."""
-    pred = F.lit(True)
-    for col, cond in where.items():
-        if isinstance(cond, tuple):
-            lo, hi = cond
-            if lo is not None:
-                pred = pred & (F.col(col) >= lo)
-            if hi is not None:
-                pred = pred & (F.col(col) <= hi)
-        else:
-            pred = pred & (F.col(col) == cond)
-    return pred
-
-
-def _file_fully_matches(f: mf.DataFile, where: dict) -> bool:
-    """True iff stats PROVE every row of the file satisfies the predicate:
-    for each condition the file's [min,max] lies inside the predicate
-    interval and the column's null count is known to be zero."""
-    for col, cond in where.items():
-        lo = f.lower_bounds.get(col)
-        hi = f.upper_bounds.get(col)
-        if lo is None or hi is None:
-            return False
-        if f.null_counts.get(col) != 0:  # unknown (None) or > 0 → unsound
-            return False
-        plo, phi = cond if isinstance(cond, tuple) else (cond, cond)
-        try:
-            if plo is not None and lo < plo:
-                return False
-            if phi is not None and hi > phi:
-                return False
-            if plo is None and phi is None:
-                continue
-        except TypeError:
-            return False
-    return True
 
 
 def delete_where(

@@ -79,3 +79,124 @@ def test_distributed_parity_stats_less_files(spark, warehouse):
     want = tbl.select_data_files({"n_tok": (100, None)})
     got = tbl.select_data_files_distributed(spark, {"n_tok": (100, None)})
     assert _paths(got) == _paths(want)
+
+
+def _drop_manifest_columns(tbl, columns):
+    """Rewrite every manifest of the current snapshot in place without
+    ``columns`` — the shape manifests had before those columns existed.
+    The footer summary is kept; the parse caches are cleared."""
+    import os
+
+    import pyarrow.parquet as pq
+
+    from lakehouse_benchmark_ingestion_spark.icelite import manifest as mf
+    from lakehouse_benchmark_ingestion_spark.icelite import metadata as md
+
+    for name in tbl.current_snapshot().manifests:
+        path = os.path.join(md.metadata_dir(tbl.location), name)
+        t = pq.read_table(path)
+        pq.write_table(t.drop_columns([c for c in columns if c in t.column_names]), path)
+    mf._MANIFEST_CACHE.clear()
+    mf._SUMMARY_CACHE.clear()
+
+
+def test_distributed_parity_legacy_manifests(spark, warehouse):
+    """Manifests written before MOR/partitioning/sort-order/DVs/lineage
+    lack ``content`` through ``lineage``; the driver parse defaults them
+    (content = data), so both planners must still return the data files."""
+    df = tokens_df(spark, SF_SMOKE)
+    tbl = Catalog(warehouse).create_table("legacy", df.schema)
+    tbl.append(df.repartitionByRange(4, "n_tok").sortWithinPartitions("n_tok"))
+    _drop_manifest_columns(
+        tbl,
+        ["content", "sequence_number", "bucket", "partition_json",
+         "sort_order", "delete_format", "first_row_id", "lineage"],
+    )
+    n_all = len(tbl.data_files())
+    assert n_all >= 4
+    hi = max(f.upper_bounds["n_tok"] for f in tbl.data_files())
+    lo = min(f.lower_bounds["n_tok"] for f in tbl.data_files())
+    want = _parity(spark, tbl, {"n_tok": ((lo + hi) // 2, None)})
+    assert want
+    assert _paths(tbl.select_data_files_distributed(spark)) == _paths(
+        tbl.data_files()
+    )
+
+
+def test_distributed_parity_mismatched_predicate_type(spark, warehouse):
+    """An int constant on the string key cannot be compared with the
+    string bounds: the driver keeps every file, and so must the
+    distributed planner (it must not compare the bounds as numbers)."""
+    df = tokens_df(spark, SF_SMOKE)
+    tbl = Catalog(warehouse).create_table("mism", df.schema)
+    tbl.append(df.repartitionByRange(4, "doc_id").sortWithinPartitions("doc_id"))
+    want = _parity(spark, tbl, {"doc_id": 5}, expect_pruning=False)
+    assert _paths(want) == _paths(tbl.data_files())
+    # and a string constant on the int column
+    want = _parity(spark, tbl, {"n_tok": ("40", None)}, expect_pruning=False)
+    assert _paths(want) == _paths(tbl.data_files())
+
+
+def test_distributed_parity_fuzz(spark, warehouse):
+    """Seeded differential test: random ``where`` dicts (equality, closed
+    and open ranges; int, str and mismatched constants; a column some
+    files hold no stats for, and one no file does) select the same files
+    in both planners."""
+    import random
+
+    df = tokens_df(spark, SF_SMOKE)
+    tbl = Catalog(warehouse).create_table("fuzz", df.schema)
+    for i in range(3):
+        tbl.append(
+            df.filter(F.col("doc_id").cast("long") % 4 == i)
+            .repartitionByRange(3, "n_tok")
+            .sortWithinPartitions("n_tok"),
+        )
+    # no n_tok / source stats in these files
+    tbl.append(
+        df.filter(F.col("doc_id").cast("long") % 4 == 3).repartition(2),
+        stat_columns=["doc_id"],
+    )
+    files = tbl.data_files()
+    n_tok = sorted({v for f in files for v in (f.lower_bounds.get("n_tok"), f.upper_bounds.get("n_tok")) if v is not None})
+    doc_ids = sorted({f.lower_bounds["doc_id"] for f in files})
+    sources = sorted(r[0] for r in df.select("source").distinct().collect())
+
+    rng = random.Random(4242)
+
+    def const(col):
+        kind = rng.random()
+        if col == "n_tok":
+            if kind < 0.15:  # mismatched: string / float constant
+                return rng.choice([str(rng.choice(n_tok)), rng.choice(n_tok) + 0.5])
+            return rng.randint(n_tok[0] - 5, n_tok[-1] + 5)
+        if col == "doc_id":
+            if kind < 0.2:  # mismatched: int constant on a string column
+                return rng.randint(0, 600)
+            return rng.choice(doc_ids) if kind < 0.7 else str(rng.randint(0, 600))
+        if col == "source":
+            return rng.choice(sources)
+        return rng.randint(0, 100)  # "tokens" (no stats) / "absent" column
+
+    def cond(col):
+        shape = rng.random()
+        if shape < 0.35:
+            return const(col)
+        a, b = const(col), const(col)
+        try:
+            a, b = min(a, b), max(a, b)
+        except TypeError:
+            pass
+        if shape < 0.7:
+            return (a, b)
+        return (a, None) if shape < 0.85 else (None, b)
+
+    cols = ["n_tok", "doc_id", "source", "tokens", "absent"]
+    pruned = 0
+    for _ in range(50):
+        where = {c: cond(c) for c in rng.sample(cols, rng.randint(1, 2))}
+        want = tbl.select_data_files(where)
+        got = tbl.select_data_files_distributed(spark, where)
+        assert _paths(got) == _paths(want), where
+        pruned += len(want) < len(files)
+    assert pruned >= 10, "the fuzz must exercise pruning"

@@ -420,6 +420,30 @@ def test_cli_count_and_minmax_pushdown(spark, warehouse, capsys):
     assert 0 < r["min"] <= r["max"]
 
 
+def test_cli_where_on_read_commands(spark, warehouse, capsys):
+    """One ``--where`` range through scan, count, minmax and lineage-scan:
+    all four read the same rows."""
+    from pyspark.sql import functions as F
+
+    from lakehouse_benchmark_ingestion_spark.sources.tokens import tokens_df
+
+    run(capsys, "create-table", "--warehouse", warehouse,
+        "--from-documents", SF_SMOKE, "--row-lineage")
+    run(capsys, "ingest", "--warehouse", warehouse,
+        "--from-documents", SF_SMOKE, "--appends", "2")
+    where = json.dumps({"n_tok": [20, 60]})
+    expected = tokens_df(spark, SF_SMOKE).filter(F.col("n_tok").between(20, 60)).count()
+    assert 0 < expected < 500
+    s = run(capsys, "scan", "--warehouse", warehouse, "--where", where)
+    c = run(capsys, "count", "--warehouse", warehouse, "--where", where)
+    assert s["rows"] == c["count"] == expected
+    m = run(capsys, "minmax", "--warehouse", warehouse, "--column", "n_tok",
+            "--where", where)
+    assert 20 <= m["min"] <= m["max"] <= 60
+    ls = run(capsys, "lineage-scan", "--warehouse", warehouse, "--where", where)
+    assert ls["rows"] == expected
+
+
 def test_cli_text_index_register_and_sync(spark, warehouse, capsys):
     from lakehouse_benchmark_ingestion_spark.icelite import Catalog
 

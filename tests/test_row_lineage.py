@@ -479,6 +479,38 @@ def test_merge_cow_dv_deleted_key_reinserts_fresh(spark, lin_table):
     assert len(rows) == 1 and rows[0]["source"] == "back"
 
 
+def test_merge_cow_lineage_duplicate_base_keys_match_plain_cow(spark, warehouse):
+    """Base rows [a, a, b], upsert a: the lineage COW merge returns the
+    same rows as the plain COW merge ([a, b]); the merged row keeps the
+    smaller of the two old ``_row_id``s."""
+    df = tokens_df(spark, SF_SMOKE)
+    base = df.filter(F.col("doc_id").isin("1", "2")).unionByName(
+        df.filter(F.col("doc_id") == "1")
+    )
+    updates = (
+        df.filter(F.col("doc_id") == "1")
+        .withColumn("source", F.lit("m"))
+        .withColumn("_seq", F.lit(1).cast("long"))
+    )
+    cat = Catalog(warehouse)
+    rows = {}
+    for name, props in (("plain", {}), ("lin", {ROW_LINEAGE_PROP: "true"})):
+        tbl = cat.create_table(name, df.schema, properties=props)
+        tbl.append(base, num_files=1)
+        if props:
+            old_ids = [
+                r[LINEAGE_ROW_ID_COL]
+                for r in tbl.scan_lineage(spark).filter(F.col("doc_id") == "1").collect()
+            ]
+        merge_into(spark, tbl, updates, key="doc_id", seq_col="_seq", strategy="cow")
+        rows[name] = sorted(
+            (r["doc_id"], r["source"]) for r in tbl.scan(spark).collect()
+        )
+    assert rows["lin"] == rows["plain"]
+    assert [k for k, _ in rows["plain"]] == ["1", "2"]
+    assert _lineage_map(spark, tbl)["1"][0] == min(old_ids)
+
+
 def test_merge_cow_lineage_then_compaction_preserves(spark, lin_table):
     """Materialized merge outputs + assigned insert files survive a
     compaction with ids and sequences intact (the rewrite-preserves

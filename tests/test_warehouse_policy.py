@@ -187,15 +187,17 @@ def test_distributed_harvest_matches_footer(spark, tmp_path):
     paths = sorted(glob.glob(f"{out}/part-*.parquet"))
     assert len(paths) == 6
 
+    from dataclasses import asdict
+
     footer = mf.harvest_stats(paths)
     dist = mf.harvest_stats_distributed(spark, paths)
-    assert len(footer) == len(dist)
-    for a, b in zip(footer, dist):
-        assert a.path == b.path
-        assert a.file_size_bytes == b.file_size_bytes
-        assert a.record_count == b.record_count
-        assert a.lower_bounds == b.lower_bounds
-        assert a.upper_bounds == b.upper_bounds
+    assert [asdict(f) for f in dist] == [asdict(f) for f in footer]
+    assert all(f.null_counts for f in footer)
+    cols = ["n_tok", "doc_id"]
+    footer_cols = mf.harvest_stats(paths, stat_columns=cols)
+    dist_cols = mf.harvest_stats_distributed(spark, paths, stat_columns=cols)
+    assert [asdict(f) for f in dist_cols] == [asdict(f) for f in footer_cols]
+    assert all(set(f.lower_bounds) == set(cols) for f in footer_cols)
 
     # auto-dispatch: below the threshold → footer path (identity result)
     auto = mf.harvest_stats_auto(paths, spark=spark)

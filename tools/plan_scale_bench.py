@@ -235,8 +235,8 @@ def main() -> None:
         # the WIN case: a selective predicate on the scattered column —
         # summaries cannot skip any manifest (every one spans ~the full
         # scatter domain), so the driver planner must parse every body
-        # single-threaded while executors split the same parse 32 ways
-        # and ship back only the ~0.5% survivors
+        # single-threaded while executors split the same parse across
+        # the cores and ship back only the ~0.5% survivors
         scat = {"scatter": (0, (1 << 32) // 200)}
         t0 = time.perf_counter()
         sel_d = tbl.select_data_files_distributed(spark, scat)
@@ -253,9 +253,8 @@ def main() -> None:
         del sel, sel_d
 
         # the hard case: an UNSELECTIVE predicate forces a full-manifest
-        # pass AND a full-size survivor set — the collect+rebuild of 10^6
-        # entries costs what the driver parse cost (documented: the
-        # distributed path wins only when survivors << total)
+        # pass AND a full-size survivor set — all 10^6 entries travel
+        # back to the driver
         t0 = time.perf_counter()
         sel = tbl.select_data_files_distributed(spark, {"n_tok": (1, None)})
         timings["select_all_distributed"] = round(
