@@ -67,26 +67,18 @@ def mor_scan(
     schema: StructType,
     data_files: list[mf.DataFile],
     delete_files: list[mf.DataFile],
-    key: str = "doc_id",
-    reader=None,
-    delete_reader=None,
+    key: str,
+    reader,
+    delete_reader,
 ) -> DataFrame:
     """Read ``data_files`` with ``delete_files`` applied (eq-delete join).
 
-    ``reader(paths) -> DataFrame`` overrides the physical read (the table's
-    alias-aware schema-evolution reader); defaults to a plain schema read.
-    ``delete_reader(paths) -> DataFrame`` likewise overrides the eq-delete
-    key read (alias-aware when the merge key was renamed after the delete
-    files were written); must yield a single column named ``key``."""
+    ``reader(paths) -> DataFrame`` is the physical read (the table's
+    alias-aware, position-delete-applied reader). ``delete_reader(paths) ->
+    DataFrame`` is the eq-delete key read (alias-aware when the merge key
+    was renamed after the delete files were written); it must yield a
+    single column named ``key``."""
     cols = [f.name for f in schema.fields]
-    if reader is None:
-        def reader(paths):
-            return spark.read.schema(schema).parquet(*paths).select(*cols)
-    if delete_reader is None:
-        key_type_str = schema[key].dataType.simpleString()
-
-        def delete_reader(paths):
-            return spark.read.schema(f"{key} {key_type_str}").parquet(*paths)
     if not data_files:
         return spark.createDataFrame([], schema).select(*cols)
     if not delete_files:

@@ -746,7 +746,8 @@ class IceliteTable:
         aliases = self.meta.column_aliases
         live = {n: olds for n, olds in aliases.items() if n in schema.fieldNames()}
         if not live:
-            return spark.read.schema(schema).parquet(*paths).select(*cols)
+            df = spark.read.schema(schema).parquet(*paths)
+            return df.select(*cols) if with_positions else df
         by_name = {f.name: f for f in schema.fields}
         extra = [
             StructField(o, by_name[n].dataType, True)
@@ -1362,14 +1363,15 @@ class IceliteTable:
         as_of_timestamp_ms: int | None = None,
     ) -> int | None:
         """Resolve the mutually-exclusive time-travel selectors to a concrete
-        snapshot id (None = current head)."""
+        snapshot id. No selector pins the current head (None only for an
+        empty table), so a commit landing mid-read cannot mix snapshots."""
         if sum(x is not None for x in (snapshot_id, ref, as_of_timestamp_ms)) > 1:
             raise ValueError("snapshot_id, ref, and as_of_timestamp_ms are exclusive")
         if ref is not None:
             return self.resolve_ref(ref)
         if as_of_timestamp_ms is not None:
             return self.snapshot_as_of(as_of_timestamp_ms).snapshot_id
-        return snapshot_id
+        return snapshot_id if snapshot_id is not None else self.meta.current_snapshot_id
 
     def select_data_files(
         self,

@@ -51,6 +51,9 @@ def get_spark(
         # timestamps in fixtures are TIMESTAMP(6) (MysqlCDCCatalog.java:244-245)
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
+        # reads name leaf files the manifests already list; above this many
+        # paths Spark lists them in a job with one task per path
+        .config("spark.sql.sources.parallelPartitionDiscovery.threshold", str(2**31 - 1))
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
     )
     # real-executor masters (local-cluster / standalone) size executor JVMs

@@ -361,12 +361,7 @@ class IceliteBatchReader(DataSourceReader):
 
     def partitions(self):
         tbl = _load_table(self.options)
-        sid = _resolve_snapshot_option(tbl, self.options)
-        if sid is None:
-            # PIN the head now: IceliteTable.meta re-reads metadata on every
-            # access, so planning files and deletes "at current" across two
-            # reads could straddle a concurrent commit and mix snapshots
-            sid = tbl.meta.current_snapshot_id
+        sid = _resolve_snapshot_option(tbl, self.options)  # pins the head
         files = tbl.select_data_files(
             where=self.where or None, snapshot_id=sid
         )
