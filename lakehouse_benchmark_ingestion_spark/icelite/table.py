@@ -1364,7 +1364,9 @@ class IceliteTable:
     ) -> int | None:
         """Resolve the mutually-exclusive time-travel selectors to a concrete
         snapshot id. No selector pins the current head (None only for an
-        empty table), so a commit landing mid-read cannot mix snapshots."""
+        empty table), which fixes a read's file and delete sets even if a
+        commit lands mid-plan; schema, column aliases and the merge key are
+        still read from the live head."""
         if sum(x is not None for x in (snapshot_id, ref, as_of_timestamp_ms)) > 1:
             raise ValueError("snapshot_id, ref, and as_of_timestamp_ms are exclusive")
         if ref is not None:

@@ -10,10 +10,10 @@ from):
   * the DataFrame build (no action) of ``spark.read.schema(s).parquet``
     over 8 / 32 / 33 / 48 / 1,000 / 4,000 tiny files (median of 3);
   * the ``IceliteTable.scan`` build over a 48-file table (median of 5);
-  * ``compact()`` of a 1,000-file table into one file (REPS fresh tables).
+  * ``compact()`` of a 1,000-file table into one file (two fresh tables).
 
 Prints ONE JSON line. Run: SPARK_GRAFT_CPUS=4 python tools/read_discovery_bench.py
-Knobs: REPS (default 2), WORK_DIR (default /tmp/read_discovery_bench).
+The work directory is READ_DISCOVERY_WH (default /tmp/read_discovery_bench).
 """
 
 from __future__ import annotations
@@ -30,8 +30,8 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 import pyarrow as pa  # noqa: E402
 import pyarrow.parquet as pq  # noqa: E402
 
-WORK = os.environ.get("WORK_DIR", "/tmp/read_discovery_bench")
-REPS = int(os.environ.get("REPS", "2"))
+WORK = os.environ.get("READ_DISCOVERY_WH", "/tmp/read_discovery_bench")
+COMPACT_REPS = 2
 PATH_COUNTS = (8, 32, 33, 48, 1000, 4000)
 
 
@@ -75,7 +75,7 @@ def main() -> None:
     scan_ms = _median_ms(lambda: t48.scan(spark), 5)
 
     compact_s = []
-    for r in range(REPS):
+    for r in range(COMPACT_REPS):
         t = cat.create_table(f"small_{r}", rows.schema)
         t.append(rows.limit(10_000), num_files=1000)
         t0 = time.perf_counter()
