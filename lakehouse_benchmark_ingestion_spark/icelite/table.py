@@ -55,6 +55,19 @@ def predicate_column(where: dict) -> Column:
     return pred
 
 
+def _row_address_cols() -> list[Column]:
+    """A row's physical address (POS_PATH_COL, POS_IDX_COL) from Spark's
+    ``_metadata`` struct. ``_metadata.file_path`` is URI-form (file:/...);
+    manifests store plain absolute paths, so it is normalized for the
+    anti-join keys to align."""
+    return [
+        F.regexp_replace(
+            F.col("_metadata.file_path"), "^file:(//)?", ""
+        ).alias(POS_PATH_COL),
+        F.col("_metadata.row_index").alias(POS_IDX_COL),
+    ]
+
+
 def _file_fully_matches(f: mf.DataFile, where: dict) -> bool:
     """True iff stats PROVE every row of the file satisfies the predicate:
     for each condition the file's [min,max] lies inside the predicate
@@ -80,8 +93,9 @@ def _file_fully_matches(f: mf.DataFile, where: dict) -> bool:
 
 
 class IceliteTable:
-    def __init__(self, location: str):
+    def __init__(self, location: str, _pinned: md.TableMetadata | None = None):
         self.location = os.path.abspath(location)
+        self._pinned = _pinned
 
     # ---- lifecycle -------------------------------------------------------
     @staticmethod
@@ -116,7 +130,19 @@ class IceliteTable:
     # ---- metadata accessors ----------------------------------------------
     @property
     def meta(self) -> md.TableMetadata:
+        if self._pinned is not None:
+            return self._pinned
         return md.read_metadata(self.location)
+
+    def pinned(self) -> "IceliteTable":
+        """A read-only view that answers every metadata accessor (schema,
+        column aliases, merge key, snapshots, file and delete sets) from ONE
+        read of the metadata, so a read built on it cannot pair one
+        version's files with another's schema or delete set. Read paths
+        only: commits re-read the live head inside ``md.commit``."""
+        if self._pinned is not None:
+            return self
+        return IceliteTable(self.location, self.meta)
 
     @property
     def schema(self) -> StructType:
@@ -717,48 +743,54 @@ class IceliteTable:
         extra columns (POS_PATH_COL = manifest-form file path, POS_IDX_COL =
         row index within the file) from Spark's ``_metadata`` struct — the
         coordinates position-delete files speak (icelite v2 parity)."""
-        schema = self.schema
-        cols = [f.name for f in schema.fields]
-        if with_positions:
-            # _metadata.file_path is URI-form (file:/...); manifests store
-            # plain absolute paths — normalize so the anti-join keys align
-            pos_cols = [
-                F.regexp_replace(
-                    F.col("_metadata.file_path"), "^file:(//)?", ""
-                ).alias(POS_PATH_COL),
-                F.col("_metadata.row_index").alias(POS_IDX_COL),
-            ]
-            cols = cols + pos_cols
         if not paths:
             # emptyRDD → ZERO partitions: a fully-pruned scan (stats/bloom
             # proved no file can match) must cost no tasks at all, not a
             # default-parallelism-wide no-op job
-            out_schema = schema
+            out_schema = self.schema
             if with_positions:
                 out_schema = StructType(
-                    list(schema.fields)
+                    list(out_schema.fields)
                     + [
                         StructField(POS_PATH_COL, StringType(), False),
                         StructField(POS_IDX_COL, LongType(), False),
                     ]
                 )
             return spark.createDataFrame(spark.sparkContext.emptyRDD(), out_schema)
-        aliases = self.meta.column_aliases
+        return self._aliased_read(
+            spark, paths, extra_cols=_row_address_cols() if with_positions else []
+        )
+
+    def _aliased_read(
+        self,
+        spark: SparkSession,
+        paths: list[str],
+        extra_fields: list[StructField] = (),
+        extra_cols: list = (),
+    ) -> DataFrame:
+        """The alias-aware Parquet read behind ``read_files`` and
+        ``lineage_read``: the read schema is the current one widened with
+        every renamed column's prior names (plus ``extra_fields``), and each
+        renamed column resolves via coalesce across its name lineage. The
+        result holds the table columns followed by ``extra_cols``. Schema
+        and aliases come from one metadata read."""
+        meta = self.meta
+        schema = StructType.fromJson(meta.schema_json)
+        aliases = meta.column_aliases
         live = {n: olds for n, olds in aliases.items() if n in schema.fieldNames()}
-        if not live:
-            df = spark.read.schema(schema).parquet(*paths)
-            return df.select(*cols) if with_positions else df
         by_name = {f.name: f for f in schema.fields}
-        extra = [
+        old_fields = [
             StructField(o, by_name[n].dataType, True)
             for n, olds in live.items()
             for o in olds
         ]
-        wide = StructType(list(schema.fields) + extra)
+        wide = StructType(list(schema.fields) + old_fields + list(extra_fields))
         df = spark.read.schema(wide).parquet(*paths)
+        if not (live or extra_fields or extra_cols):
+            return df
         for n, olds in live.items():
             df = df.withColumn(n, F.coalesce(F.col(n), *[F.col(o) for o in olds]))
-        return df.select(*cols)
+        return df.select(*schema.fieldNames(), *extra_cols)
 
     def _pos_delete_addr_df(self, spark: SparkSession, pos_dels: list[mf.DataFile]):
         """Expanded ``(file_path, pos)`` addresses of the given pos-delete
@@ -791,9 +823,9 @@ class IceliteTable:
         every delete) read on the plain path — zero join cost; only
         addressed files pay a broadcast anti-join on (file_path, pos).
 
-        Every scan AND every rewrite path must read through this (or apply
-        it around read_files) — a rewrite that reads raw files would bake
-        position-deleted rows back into its outputs."""
+        ``rewrite_reader`` wraps this; read through it — a rewrite that
+        reads raw files would bake position-deleted rows back into its
+        outputs."""
         pos_dels = self.pos_delete_files(snapshot_id)
         if not pos_dels:
             return lambda paths: self.read_files(spark, paths)
@@ -839,38 +871,51 @@ class IceliteTable:
         spark: SparkSession,
         snapshot_id: int | None = None,
         delete_files: list[mf.DataFile] | None = None,
+        merge_key: str | None = None,
     ):
-        """The ONE delete-applied reader every rewrite path must use:
+        """The ONE delete-applied reader, serving every read that must see
+        only live rows — ``scan``, row DML, MERGE, compaction, clustering:
         ``reader(files: list[DataFile]) -> DataFrame`` applying outstanding
         position deletes AND equality deletes (v2 sequence rule, recorded
-        merge key, alias-aware) for the given snapshot. Compaction and
-        clustering both read through this — a drifted copy of the
-        delete-application logic in either operator silently resurrects
-        deleted rows in rewritten outputs. The snapshot is pinned ONCE at
-        construction, so concurrent commits (e.g. partial-progress
-        intermediate snapshots) cannot shift the delete set mid-run."""
-        snapshot_id = (
-            snapshot_id
-            if snapshot_id is not None
-            else self.meta.current_snapshot_id
-        )
+        merge key, alias-aware) for the given snapshot. A drifted copy of
+        the delete-application logic would silently resurrect deleted rows,
+        so there is none. Schema, aliases, merge key and delete sets all
+        come from one metadata read (``pinned``) taken at construction, so
+        concurrent commits (a rename, partial-progress intermediate
+        snapshots) cannot shift any of them mid-run.
+
+        ``merge_key`` names the key outstanding eq-deletes apply under; it
+        defaults to the recorded key (else ``doc_id``) and must match the
+        recorded key when one exists."""
+        view = self.pinned()
+        if snapshot_id is None:
+            snapshot_id = view.meta.current_snapshot_id
         dels = (
             delete_files
             if delete_files is not None
-            else self.delete_files(snapshot_id)
+            else view.delete_files(snapshot_id)
         )
-        pos = self.pos_reader(spark, snapshot_id)
+        pos = view.pos_reader(spark, snapshot_id)
         if not dels:
             return lambda files: pos([f.path for f in files])
         from . import mor
 
-        key = self.recorded_merge_key() or "doc_id"
-        schema = self.schema
-        delete_reader = self._read_delete_keys(spark, key)
+        recorded = view.recorded_merge_key()
+        if merge_key is None:
+            merge_key = recorded or "doc_id"
+        elif recorded is not None and merge_key != recorded:
+            raise ValueError(
+                f"scan merge_key={merge_key!r} does not match the key the "
+                f"outstanding eq-delete files were written under "
+                f"({recorded!r}); reading them under the wrong column "
+                f"would silently resurrect deleted rows"
+            )
+        schema = view.schema
+        delete_reader = view._read_delete_keys(spark, merge_key)
 
         def read(files: list[mf.DataFile]) -> DataFrame:
             return mor.mor_scan(
-                spark, schema, files, dels, key=key,
+                spark, schema, files, dels, key=merge_key,
                 reader=pos, delete_reader=delete_reader,
             )
 
@@ -1364,9 +1409,10 @@ class IceliteTable:
     ) -> int | None:
         """Resolve the mutually-exclusive time-travel selectors to a concrete
         snapshot id. No selector pins the current head (None only for an
-        empty table), which fixes a read's file and delete sets even if a
-        commit lands mid-plan; schema, column aliases and the merge key are
-        still read from the live head."""
+        empty table). On a ``pinned`` view, which every read path builds
+        on, that head and the schema, column aliases and merge key all come
+        from the same metadata read, so a commit landing mid-plan changes
+        none of them."""
         if sum(x is not None for x in (snapshot_id, ref, as_of_timestamp_ms)) > 1:
             raise ValueError("snapshot_id, ref, and as_of_timestamp_ms are exclusive")
         if ref is not None:
@@ -1495,26 +1541,27 @@ class IceliteTable:
 
         At 10^12 rows a partition- or range-aligned count is answered from
         the manifest alone — no tasks launched."""
-        sid = self.resolve_snapshot(snapshot_id, ref, None)
-        if self.delete_files(sid) or self.pos_delete_files(sid):
-            n = self.scan(spark, snapshot_id=sid, where=where).count()
+        view = self.pinned()
+        sid = view.resolve_snapshot(snapshot_id, ref, None)
+        if view.delete_files(sid) or view.pos_delete_files(sid):
+            n = view.scan(spark, snapshot_id=sid, where=where).count()
             return {"count": n, "mode": "scan",
                     "files_metadata": 0, "files_scanned": -1}
         if not where:
-            files = self.data_files(sid)
+            files = view.data_files(sid)
             return {
                 "count": sum(f.record_count for f in files),
                 "mode": "metadata",
                 "files_metadata": len(files), "files_scanned": 0,
             }
-        candidates = self.select_data_files(where, sid)
+        candidates = view.select_data_files(where, sid)
         full = [f for f in candidates if _file_fully_matches(f, where)]
         full_paths = {f.path for f in full}
         partial = [f for f in candidates if f.path not in full_paths]
         n = sum(f.record_count for f in full)
         if partial:
             n += (
-                self.read_files(spark, [f.path for f in partial])
+                view.read_files(spark, [f.path for f in partial])
                 .filter(predicate_column(where))
                 .count()
             )
@@ -1551,16 +1598,17 @@ class IceliteTable:
         "files_scanned"}`` — mode ``metadata`` means zero rows read, the
         partition- or range-aligned case that answers from the manifest
         alone at 10^12 rows."""
-        sid = self.resolve_snapshot(snapshot_id, ref, None)
-        if self.delete_files(sid) or self.pos_delete_files(sid):
+        view = self.pinned()
+        sid = view.resolve_snapshot(snapshot_id, ref, None)
+        if view.delete_files(sid) or view.pos_delete_files(sid):
             row = (
-                self.scan(spark, snapshot_id=sid, where=where)
+                view.scan(spark, snapshot_id=sid, where=where)
                 .agg(F.min(column), F.max(column))
                 .first()
             )
             return {"min": row[0], "max": row[1], "mode": "scan",
                     "files_metadata": 0, "files_scanned": -1}
-        candidates = self.select_data_files(where, sid)
+        candidates = view.select_data_files(where, sid)
         full_match = [
             f for f in candidates if not where or _file_fully_matches(f, where)
         ]
@@ -1581,7 +1629,7 @@ class IceliteTable:
             else:
                 to_scan.append(f)  # bounds unknown: must read
         if to_scan:
-            df = self.read_files(spark, [f.path for f in to_scan])
+            df = view.read_files(spark, [f.path for f in to_scan])
             if where:
                 df = df.filter(predicate_column(where))
             row = df.agg(F.min(column), F.max(column)).first()
@@ -1613,40 +1661,17 @@ class IceliteTable:
         ``file_filter(DataFile) -> bool`` enables stats-based file pruning
         (the metadata-level partition pruning of SURVEY.md §4.1) before Spark
         ever opens a file; Catalyst's own predicate pushdown + column pruning
-        then applies inside each file. If the snapshot carries eq-delete
-        files (merge-on-read MERGE INTO), they are applied here — the
-        read-side half of the v2 upsert contract (icelite/mor.py).
+        then applies inside each file. Outstanding eq- and pos-deletes are
+        applied by ``rewrite_reader`` — the read-side half of the v2 upsert
+        contract (icelite/mor.py). The whole build answers from one
+        metadata read (``pinned``).
         """
-        snapshot_id = self.resolve_snapshot(snapshot_id, ref, as_of_timestamp_ms)
-        files = self.select_data_files(
+        view = self.pinned()
+        snapshot_id = view.resolve_snapshot(snapshot_id, ref, as_of_timestamp_ms)
+        files = view.select_data_files(
             where=where, snapshot_id=snapshot_id, file_filter=file_filter
         )
-        schema = self.schema
-        deletes = self.delete_files(snapshot_id)
-        # POSITION deletes wrap the physical reader (anti-join on the row
-        # address), so both the plain and the eq-delete path below read
-        # position-deleted rows out
-        reader = self.pos_reader(spark, snapshot_id)
-        if deletes:
-            from . import mor
-
-            recorded = self.recorded_merge_key()
-            if merge_key is None:
-                merge_key = recorded or "doc_id"
-            elif recorded is not None and merge_key != recorded:
-                raise ValueError(
-                    f"scan merge_key={merge_key!r} does not match the key the "
-                    f"outstanding eq-delete files were written under "
-                    f"({recorded!r}); reading them under the wrong column "
-                    f"would silently resurrect deleted rows"
-                )
-            df = mor.mor_scan(
-                spark, schema, files, deletes, key=merge_key,
-                reader=reader,
-                delete_reader=self._read_delete_keys(spark, merge_key),
-            )
-        else:
-            df = reader([f.path for f in files])
+        df = view.rewrite_reader(spark, snapshot_id, merge_key=merge_key)(files)
         if where:
             # exact semantics: the file skip is a superset; Catalyst pushes
             # the row filter into the Parquet reader as well
@@ -1674,19 +1699,20 @@ class IceliteTable:
         (enforced at commit time by ``_assign_row_ids``), so live
         eq-deletes only occur when lineage was enabled mid-life on a MOR
         table: compact first."""
+        view = self.pinned()
         sid = (
             snapshot_id
             if snapshot_id is not None
-            else self.meta.current_snapshot_id
+            else view.meta.current_snapshot_id
         )
-        if self.delete_files(sid):
+        if view.delete_files(sid):
             raise ValueError(
                 "row-lineage scan with outstanding equality deletes is not "
                 "supported (they predate row-lineage.enabled — lineage "
                 "tables refuse new ones): compact, or run "
                 "convert-eq-deletes to re-express them as position deletes"
             )
-        schema = self.schema
+        schema = view.schema
         cols = [f.name for f in schema.fields]
         lineage_fields = [
             StructField(LINEAGE_ROW_ID_COL, LongType(), True),
@@ -1697,30 +1723,13 @@ class IceliteTable:
                 spark.sparkContext.emptyRDD(),
                 StructType(list(schema.fields) + lineage_fields),
             )
-        # alias-aware wide read (same name-lineage coalesce as read_files)
-        # + the physical lineage columns materialized rewrites carry
-        aliases = self.meta.column_aliases
-        live = {n: o for n, o in aliases.items() if n in schema.fieldNames()}
-        by_name = {f.name: f for f in schema.fields}
-        extra = [
-            StructField(o, by_name[n].dataType, True)
-            for n, olds in live.items()
-            for o in olds
-        ]
-        wide = StructType(list(schema.fields) + extra + lineage_fields)
-        df = spark.read.schema(wide).parquet(*[f.path for f in files])
-        for n, olds in live.items():
-            df = df.withColumn(
-                n, F.coalesce(F.col(n), *[F.col(o) for o in olds])
-            )
-        df = df.select(
-            *cols,
-            LINEAGE_ROW_ID_COL,
-            LINEAGE_SEQ_COL,
-            F.regexp_replace(
-                F.col("_metadata.file_path"), "^file:(//)?", ""
-            ).alias(POS_PATH_COL),
-            F.col("_metadata.row_index").alias(POS_IDX_COL),
+        # the alias-aware read plus the physical lineage columns that
+        # materialized rewrites carry, and the row address
+        df = view._aliased_read(
+            spark,
+            [f.path for f in files],
+            extra_fields=lineage_fields,
+            extra_cols=[LINEAGE_ROW_ID_COL, LINEAGE_SEQ_COL, *_row_address_cols()],
         )
         amap = spark.createDataFrame(
             [(f.path, f.first_row_id, f.sequence_number) for f in files],
@@ -1753,9 +1762,9 @@ class IceliteTable:
                 ),
             )
         )
-        pos_dels = self.pos_delete_files(sid)
+        pos_dels = view.pos_delete_files(sid)
         if pos_dels:
-            dels = self._pos_delete_addr_df(spark, pos_dels)
+            dels = view._pos_delete_addr_df(spark, pos_dels)
             df = df.join(
                 dels,
                 (F.col(POS_PATH_COL) == F.col("file_path"))
@@ -1776,9 +1785,10 @@ class IceliteTable:
         ``_last_updated_sequence_number`` next to the data columns — the
         v3 lineage surface. File pruning is the shared stack
         (``select_data_files``); the row filter is ``scan``'s."""
-        sid = self.resolve_snapshot(snapshot_id, ref, as_of_timestamp_ms)
-        files = self.select_data_files(where=where, snapshot_id=sid)
-        df = self.lineage_read(spark, files, snapshot_id=sid)
+        view = self.pinned()
+        sid = view.resolve_snapshot(snapshot_id, ref, as_of_timestamp_ms)
+        files = view.select_data_files(where=where, snapshot_id=sid)
+        df = view.lineage_read(spark, files, snapshot_id=sid)
         return df.filter(predicate_column(where)) if where else df
 
 

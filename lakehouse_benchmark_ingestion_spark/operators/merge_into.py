@@ -195,18 +195,12 @@ def merge_into(
         )
     else:
         if matched_paths:
-            # apply any outstanding eq-delete files (a prior merge-on-read
-            # commit) while reading — rewritten rows must not resurrect. The
-            # deletes apply under the key RECORDED when they were written,
-            # which may differ from this merge's key.
-            from ..icelite.mor import mor_scan
-
-            mor_key = table.recorded_merge_key() or key
-            matched_data = mor_scan(
-                spark, schema, [file_by_path[p] for p in matched_paths],
-                table.delete_files(base_sid), key=mor_key,
-                reader=table.pos_reader(spark, base_sid),
-                delete_reader=table._read_delete_keys(spark, mor_key),
+            # apply the planning snapshot's outstanding deletes (a prior
+            # merge-on-read commit) while reading — rewritten rows must not
+            # resurrect. Eq-deletes apply under the key RECORDED when they
+            # were written, which may differ from this merge's key.
+            matched_data = table.rewrite_reader(spark, base_sid)(
+                [file_by_path[p] for p in matched_paths]
             )
             unchanged = matched_data.join(winners_j.select(key), key, "left_anti")
             new_data = unchanged.unionByName(winners.select(*[f.name for f in schema.fields]))
@@ -404,14 +398,15 @@ def _merge_bucketed(
     added: list[mf.DataFile] = []
     resumed = 0
 
+    # delete-applied read of the planning snapshot: the per-bucket rewrite
+    # must not resurrect position-deleted rows
+    read = table.rewrite_reader(spark, base_snapshot_id) if files else None
+
     def run_one(b: int) -> tuple[int, list[str]]:
         files_b = by_bucket.get(b, [])
         upd_b = winners_b.filter(F.col("_b") == b).select(*cols)
         if files_b:
-            # pos-aware read: the per-bucket rewrite must not resurrect
-            # position-deleted rows (eq-deletes are excluded by the
-            # bucketed fast path's guard; pos-deletes are reader-applied)
-            data = table.pos_reader(spark)([f.path for f in files_b])
+            data = read(files_b)
             unchanged = data.join(F.broadcast(upd_b.select(key)), key, "left_anti")
             new_data = unchanged.unionByName(upd_b)
         else:

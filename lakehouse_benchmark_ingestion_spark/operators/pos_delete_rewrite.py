@@ -36,19 +36,10 @@ import uuid
 from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
 
+from ..icelite import dv as _dv
 from ..icelite import manifest as mf
 from ..icelite.table import IceliteTable
 from ..plans.lineage import LineageLog, LineageRow
-
-
-def _read_addresses(spark: SparkSession, pos_dels: list[mf.DataFile]):
-    """Union of every sidecar's (file_path, pos) relation, across BOTH
-    physical encodings — delegated to the ONE shared expansion
-    (icelite/dv.py ``sidecar_addresses``), so rewrite actions and scan-side
-    anti-joins can never diverge on which rows a sidecar deletes."""
-    from ..icelite import dv as _dv
-
-    return _dv.sidecar_addresses(spark, pos_dels)
 
 
 def rewrite_position_deletes(
@@ -64,7 +55,7 @@ def rewrite_position_deletes(
         return {"delete_files_in": len(pos_dels), "delete_files_out": 0}
 
     live_paths = [f.path for f in table.data_files()]
-    addrs = _read_addresses(spark, pos_dels)
+    addrs = _dv.sidecar_addresses(spark, pos_dels)
     live = spark.createDataFrame([(p,) for p in live_paths], "file_path string")
     merged = (
         addrs.join(F.broadcast(live), "file_path", "left_semi")
@@ -277,8 +268,6 @@ def convert_pos_deletes_to_dv(
     steady-state read cost of a heavily-deleted table becomes one bitmap
     fetch per scanned file. The pack runs executor-side (grouped-map
     pandas UDF); the driver never sees a position."""
-    from ..icelite import dv as _dv
-
     run_id = run_id or uuid.uuid4().hex[:12]
     pos_dels = table.pos_delete_files()
     already_one_dv = (
@@ -291,7 +280,7 @@ def convert_pos_deletes_to_dv(
     live = spark.createDataFrame(
         [(f.path,) for f in table.data_files()], "file_path string"
     )
-    merged = _read_addresses(spark, pos_dels).join(
+    merged = _dv.sidecar_addresses(spark, pos_dels).join(
         F.broadcast(live), "file_path", "left_semi"
     )
     out_dir = os.path.join(table.location, "data", f"dvrw-{run_id}-posdeletes")

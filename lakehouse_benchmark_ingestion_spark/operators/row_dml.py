@@ -100,17 +100,10 @@ def delete_where(
             # v3 row lineage: surviving rows keep their _row_id /
             # _last_updated_sequence_number through the rewrite
             # (materialized columns; lineage tables carry no eq-deletes)
-            data = table.lineage_read(spark, partial)
+            data = table.lineage_read(spark, partial, snap.snapshot_id)
         else:
-            # outstanding eq-deletes must not resurrect through the rewrite
-            from ..icelite.mor import mor_scan
-
-            mor_key = table.recorded_merge_key() or key
-            data = mor_scan(
-                spark, table.schema, partial, table.delete_files(), key=mor_key,
-                reader=table.pos_reader(spark),
-                delete_reader=table._read_delete_keys(spark, mor_key),
-            )
+            # outstanding deletes must not resurrect through the rewrite
+            data = table.rewrite_reader(spark, snap.snapshot_id)(partial)
         # SQL DELETE removes only rows where the predicate is TRUE; rows
         # where it evaluates to NULL (null in a predicate column) must be
         # KEPT. ~NULL is NULL, which filter() drops — coalesce to FALSE
@@ -486,7 +479,7 @@ def update_where(
     if strategy == "mor":
         return _update_where_mor(
             spark, table, where, assignments, candidates,
-            target_file_size, key, run_id, timestamp_ms,
+            target_file_size, key, run_id, timestamp_ms, snap.snapshot_id,
         )
     if strategy != "cow":
         raise ValueError(f"unknown update strategy {strategy!r}")
@@ -500,7 +493,7 @@ def update_where(
         # v3 row lineage through UPDATE: every row keeps its _row_id; rows
         # the predicate selects get _last_updated_sequence_number bumped to
         # this commit's sequence, untouched rows keep theirs (materialized)
-        data = table.lineage_read(spark, candidates)
+        data = table.lineage_read(spark, candidates, snap.snapshot_id)
         extra = [
             F.col(LINEAGE_ROW_ID_COL),
             F.when(F.coalesce(pred, F.lit(False)), F.lit(seq))
@@ -508,14 +501,7 @@ def update_where(
             .alias(LINEAGE_SEQ_COL),
         ]
     else:
-        from ..icelite.mor import mor_scan
-
-        mor_key = table.recorded_merge_key() or key
-        data = mor_scan(
-            spark, schema, candidates, table.delete_files(), key=mor_key,
-            reader=table.pos_reader(spark),
-            delete_reader=table._read_delete_keys(spark, mor_key),
-        )
+        data = table.rewrite_reader(spark, snap.snapshot_id)(candidates)
         extra = []
     # all SET expressions evaluate against the OLD row: select, don't chain
     projected = data.select(
@@ -590,6 +576,7 @@ def _update_where_mor(
     key: str,
     run_id: str,
     timestamp_ms: int | None,
+    snapshot_id: int,
 ) -> dict:
     """Merge-on-read UPDATE (Iceberg v2 MOR-update parity): position-delete
     the old images + append the updated copies, one atomic commit.
@@ -597,7 +584,7 @@ def _update_where_mor(
     Two column-pruned passes over the candidate files, no rewrite:
 
     1. **Updated copies** — the VISIBLE matching rows (outstanding pos- and
-       eq-deletes applied through the same mor_scan every read uses; an
+       eq-deletes of ``snapshot_id`` applied by ``rewrite_reader``; an
        already-deleted row must not resurrect as an updated copy) with the
        SET expressions applied against the OLD values, appended as new data
        files at the commit's sequence number.
@@ -612,7 +599,6 @@ def _update_where_mor(
     The sidecar's sequence number gates every candidate file (all older);
     it can never address the freshly-appended copies because addresses are
     (path, pos) of OLD files and paths are never reused."""
-    from ..icelite.mor import mor_scan
     from ..icelite.table import POS_IDX_COL, POS_PATH_COL
 
     schema = table.schema
@@ -627,18 +613,13 @@ def _update_where_mor(
         # v3 row lineage: the updated copy KEEPS the old image's _row_id
         # and records this commit's sequence as its last update
         # (materialized — appended copies must not consume fresh ids)
-        visible = table.lineage_read(spark, candidates)
+        visible = table.lineage_read(spark, candidates, snapshot_id)
         extra = [
             F.col(LINEAGE_ROW_ID_COL),
             F.lit(new_seq).cast("long").alias(LINEAGE_SEQ_COL),
         ]
     else:
-        mor_key = table.recorded_merge_key() or key
-        visible = mor_scan(
-            spark, schema, candidates, table.delete_files(), key=mor_key,
-            reader=table.pos_reader(spark),
-            delete_reader=table._read_delete_keys(spark, mor_key),
-        )
+        visible = table.rewrite_reader(spark, snapshot_id)(candidates)
         extra = []
     updated = visible.filter(pred).select(
         *[

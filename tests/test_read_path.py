@@ -87,3 +87,68 @@ def test_unpinned_scan_reads_one_snapshot_under_concurrent_commit(
     monkeypatch.undo()
     assert fired and not tbl.delete_files(), "the compaction committed mid-scan"
     assert n == expected == tbl.scan(spark).count()
+
+
+def test_scan_keeps_its_schema_when_a_rename_commits_mid_build(
+    spark, sequences_table, monkeypatch
+):
+    """A rename that commits while ``scan()`` builds (here: from inside
+    ``pos_reader``, with eq-deletes outstanding) must not pair the pinned
+    files and deletes with the renamed schema: the scan answers with the
+    columns and rows of the metadata it started from."""
+    from lakehouse_benchmark_ingestion_spark.icelite.table import IceliteTable
+    from lakehouse_benchmark_ingestion_spark.operators.merge_into import merge_into
+    from lakehouse_benchmark_ingestion_spark.sources.tokens import updates_df
+
+    tbl = sequences_table
+    merge_into(spark, tbl, updates_df(spark, SF_SMOKE), strategy="mor")
+    assert tbl.delete_files()
+    columns = tbl.schema.fieldNames()
+    expected = tbl.scan(spark).count()
+
+    real = IceliteTable.pos_reader
+    fired = []
+
+    def rename_then_read(self, *args, **kwargs):
+        if not fired:
+            fired.append(True)
+            tbl.rename_column("n_tok", "n_tok2")
+        return real(self, *args, **kwargs)
+
+    monkeypatch.setattr(IceliteTable, "pos_reader", rename_then_read)
+    df = tbl.scan(spark)
+    monkeypatch.undo()
+    assert fired and "n_tok2" in tbl.schema.fieldNames()
+    assert df.columns == columns
+    assert df.count() == expected
+
+
+def test_scan_build_reads_the_metadata_once(spark, sequences_table, monkeypatch):
+    """Schema, aliases, merge key, snapshot and file/delete sets of one
+    ``scan()`` build all come from a single metadata read — with and
+    without outstanding eq- and pos-deletes."""
+    from lakehouse_benchmark_ingestion_spark.icelite import metadata as md
+    from lakehouse_benchmark_ingestion_spark.operators.merge_into import merge_into
+    from lakehouse_benchmark_ingestion_spark.operators.row_dml import delete_where
+    from lakehouse_benchmark_ingestion_spark.sources.tokens import updates_df
+
+    tbl = sequences_table
+    real = md.read_metadata
+    reads = []
+
+    def counted(*args, **kwargs):
+        reads.append(args)
+        return real(*args, **kwargs)
+
+    def reads_per_build() -> int:
+        reads.clear()
+        monkeypatch.setattr(md, "read_metadata", counted)
+        tbl.scan(spark, where={"n_tok": (10, 20)}, columns=["doc_id"])
+        monkeypatch.undo()
+        return len(reads)
+
+    assert reads_per_build() == 1
+    merge_into(spark, tbl, updates_df(spark, SF_SMOKE), strategy="mor")
+    delete_where(spark, tbl, {"n_tok": (10, 12)}, strategy="mor-pos")
+    assert tbl.delete_files() and tbl.pos_delete_files()
+    assert reads_per_build() == 1
