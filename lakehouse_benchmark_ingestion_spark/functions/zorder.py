@@ -18,7 +18,7 @@ from __future__ import annotations
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
 from pyspark.sql.types import LongType
@@ -103,37 +103,9 @@ def hilbert_key_udf(d0: pd.Series, d1: pd.Series, d2: pd.Series) -> pd.Series:
     return pd.Series(h.astype(np.int64))
 
 
-_SPREAD_STEPS = [
-    (32, 0x1F00000000FFFF),
-    (16, 0x1F0000FF0000FF),
-    (8, 0x100F00F00F00F00F),
-    (4, 0x10C30C30C30C30C3),
-    (2, 0x1249249249249249),
-]
-
-
-def _spread3_col(x: Column) -> Column:
-    """Catalyst-expression twin of _spread3 — pure JVM bit math, so plans
-    that must re-evaluate the key (e.g. repartitionByRange's boundary
-    sampler) never pay a second Python pass."""
-    x = x.bitwiseAND(F.lit(DIM_MASK).cast("long"))
-    for shift, mask in _SPREAD_STEPS:
-        x = (x.bitwiseOR(F.shiftleft(x, shift))).bitwiseAND(F.lit(mask).cast("long"))
-    return x
-
-
-def morton_key_cols(d0: Column, d1: Column, d2: Column) -> Column:
-    """63-bit Morton code as a built-in expression tree (whole-stage
-    codegen). Bit-identical to morton_key_udf — equality is unit-tested."""
-    return (
-        _spread3_col(d0)
-        .bitwiseOR(F.shiftleft(_spread3_col(d1), 1))
-        .bitwiseOR(F.shiftleft(_spread3_col(d2), 2))
-    )
-
-
-def _dim_cols(df: DataFrame | None = None) -> tuple[Column, Column, Column]:
-    """JVM-side 21-bit dimension prep for (source, n_tok, hash(doc_id)).
+def _dim_cols(df: DataFrame | None = None) -> tuple[str, str, str]:
+    """JVM-side 21-bit dimension prep for (source, n_tok, hash(doc_id)), as
+    SQL expressions shared by the Morton expression and both UDFs.
 
     - source: xxhash64 masked to 21 bits — categorical grouping (equal values
       cluster; ordering between categories is arbitrary, which Z/Hilbert
@@ -146,13 +118,24 @@ def _dim_cols(df: DataFrame | None = None) -> tuple[Column, Column, Column]:
     degrades to a constant — the interleave stays valid on the remaining
     dims instead of failing the rewrite.
     """
-    mask = F.lit(DIM_MASK).cast("long")
     have = set(df.columns) if df is not None else {"source", "n_tok", "doc_id"}
-    zero = F.lit(0).cast("long")
-    src = F.xxhash64(F.col("source")).bitwiseAND(mask) if "source" in have else zero
-    ntk = F.least(F.col("n_tok").cast("long"), mask) if "n_tok" in have else zero
-    doc = F.xxhash64(F.col("doc_id")).bitwiseAND(mask) if "doc_id" in have else zero
+    src = f"(xxhash64(`source`) & {DIM_MASK}L)" if "source" in have else "0L"
+    ntk = f"least(CAST(`n_tok` AS BIGINT), {DIM_MASK}L)" if "n_tok" in have else "0L"
+    doc = f"(xxhash64(`doc_id`) & {DIM_MASK}L)" if "doc_id" in have else "0L"
     return src, ntk, doc
+
+
+def morton_key_sql(d0: str, d1: str, d2: str) -> str:
+    """63-bit Morton code as ONE SQL expression (whole-stage codegen, no
+    Python boundary, safe to re-evaluate in range samplers): bit i of
+    dimension j lands at position 3i + j, as in ``morton3``. Built as a
+    string so the driver makes one parse call, not a Column call per bit
+    operation. Bit-identical to morton_key_udf (tests/test_zorder.py)."""
+    return " | ".join(
+        f"shiftleft(shiftright({d}, {i}) & 1L, {3 * i + j})"
+        for j, d in enumerate((d0, d1, d2))
+        for i in range(BITS)
+    )
 
 
 def with_cluster_key(
@@ -166,9 +149,9 @@ def with_cluster_key(
     bit-identical. Hilbert always uses the pandas UDF (the Skilling state
     machine has no reasonable expression-tree form).
     """
-    src, ntk, doc = _dim_cols(df)
+    dims = _dim_cols(df)
     if curve in ("zorder", "morton", "z"):
         if impl == "pandas":
-            return df.withColumn(key_col, morton_key_udf(src, ntk, doc))
-        return df.withColumn(key_col, morton_key_cols(src, ntk, doc))
-    return df.withColumn(key_col, hilbert_key_udf(src, ntk, doc))
+            return df.withColumn(key_col, morton_key_udf(*map(F.expr, dims)))
+        return df.withColumn(key_col, F.expr(morton_key_sql(*dims)))
+    return df.withColumn(key_col, hilbert_key_udf(*map(F.expr, dims)))

@@ -24,6 +24,7 @@ from . import manifest as mf
 
 _FSEQ = "__icelite_fseq"
 _DSEQ = "__icelite_dseq"
+_DKEY = "__icelite_dkey"
 
 # delete sides beneath this total size ride a broadcast join
 BROADCAST_DELETE_BYTES = 256 * 1024 * 1024
@@ -118,19 +119,21 @@ def mor_scan(
         dels = reduce(
             DataFrame.unionByName,
             [
-                delete_reader(paths)
-                .select(key, F.lit(seq).cast("long").alias(_DSEQ))
+                delete_reader(paths).select(
+                    F.col(key).alias(_DKEY), F.lit(seq).cast("long").alias(_DSEQ)
+                )
                 for seq, paths in sorted(del_by_seq.items())
             ],
         )
-        # one delete row per key: only the LARGEST sequence matters
-        dels = dels.groupBy(key).agg(F.max(_DSEQ).alias(_DSEQ))
         if sum(d.file_size_bytes for d in delete_files) <= BROADCAST_DELETE_BYTES:
             dels = F.broadcast(dels)
-        survivors = (
-            data.join(dels, key, "left")
-            .filter(F.col(_DSEQ).isNull() | (F.col(_DSEQ) <= F.col(_FSEQ)))
-            .select(*cols)
-        )
+        # the v2 rule as one conditional anti-join: a row dies iff some
+        # delete with a LARGER sequence matches its key (no per-key max
+        # shuffle in front of the broadcast)
+        survivors = data.join(
+            dels,
+            (F.col(key) == F.col(_DKEY)) & (F.col(_DSEQ) > F.col(_FSEQ)),
+            "left_anti",
+        ).select(*cols)
         parts.append(survivors)
     return reduce(DataFrame.unionByName, parts)

@@ -73,9 +73,13 @@ def merge_into(
     commits only the branch ref (write-audit-publish for upserts —
     Iceberg's ``spark.wap.branch`` applied to MERGE): main readers see
     nothing until ``fast_forward(branch)`` publishes."""
+    # one metadata read plans the whole merge: write mode, snapshot, file
+    # and delete sets, schema and sequence number all come from ``view``;
+    # commits go through ``table`` and re-read the live head
+    view = table.pinned()
     if strategy is None:
-        strategy = table.write_mode("merge")
-    lineage_on = table.row_lineage_enabled()
+        strategy = view.write_mode("merge")
+    lineage_on = view.row_lineage_enabled()
     if lineage_on and strategy != "cow":
         # MOR merge writes eq-deletes, which cannot address row ids and
         # are refused at commit on lineage tables. COW carries: survivors
@@ -85,13 +89,14 @@ def merge_into(
             f"merge strategy {strategy!r} is not supported on row-lineage "
             "tables (eq-deletes cannot carry row ids): use strategy='cow'"
         )
+    if strategy not in ("cow", "mor"):
+        raise ValueError(f"unknown merge strategy {strategy!r}")
     run_id = run_id or uuid.uuid4().hex[:12]
     if branch is not None:
-        snap = table.meta.snapshot(table.resolve_ref(branch))
+        snap = view.meta.snapshot(view.resolve_ref(branch))
     else:
-        snap = table.current_snapshot()
-    files = table.data_files(snap.snapshot_id) if snap else []
-    base_sid = snap.snapshot_id if snap else None
+        snap = view.current_snapshot()
+    files = view.data_files(snap.snapshot_id) if snap else []
 
     # 1. last-writer-wins within the batch
     w = Window.partitionBy(key).orderBy(F.col(seq_col).desc())
@@ -99,55 +104,86 @@ def merge_into(
         updates.withColumn("_rn", F.row_number().over(w))
         .filter(F.col("_rn") == 1)
         .drop("_rn", seq_col)
-    )
-    winners = winners.cache()
-    n_updates = winners.count()
-
-    if strategy == "mor":
-        return _merge_mor(
-            spark, table, winners, n_updates, key, run_id, target_file_size,
-            timestamp_ms, branch=branch,
+    ).cache()
+    try:
+        if strategy == "mor":
+            return _merge_mor(
+                spark, table, view, winners, winners.count(), key, run_id,
+                target_file_size, timestamp_ms, branch=branch,
+            )
+        spec = view.bucket_spec
+        if (
+            branch is None  # bucketed fast path not wired for branch commits
+            and not lineage_on  # bucketed rewrite does not carry row ids
+            and spec is not None
+            and spec[0] == key
+            and not view.delete_files()
+            # files with bucket == -1 (written before bucket properties
+            # existed, or with lost tags) are invisible to the per-bucket
+            # anti-join — an upsert of a key living there would duplicate.
+            # Fall through to the generic COW path, which rewrites by
+            # key-range overlap instead.
+            and all(f.bucket != -1 for f in files)
+        ):
+            return _merge_bucketed(
+                spark, table, view, winners, winners.count(), spec, run_id,
+                target_file_size, timestamp_ms, files,
+                base_snapshot_id=snap.snapshot_id if snap else -1,
+            )
+        return _merge_cow(
+            spark, table, view, winners, snap, files, key, run_id,
+            target_file_size, timestamp_ms, branch, lineage_on,
         )
-    if strategy != "cow":
-        raise ValueError(f"unknown merge strategy {strategy!r}")
+    finally:
+        winners.unpersist()
 
-    spec = table.bucket_spec
-    if (
-        branch is None  # bucketed fast path not wired for branch commits
-        and not lineage_on  # bucketed rewrite does not carry row ids
-        and spec is not None
-        and spec[0] == key
-        and not table.delete_files()
-        # files with bucket == -1 (written before bucket properties existed,
-        # or with lost tags) are invisible to the per-bucket anti-join — an
-        # upsert of a key living there would duplicate. Fall through to the
-        # generic COW path, which rewrites by key-range overlap instead.
-        and all(f.bucket != -1 for f in files)
-    ):
-        return _merge_bucketed(
-            spark, table, winners, n_updates, spec, run_id, target_file_size,
-            timestamp_ms, files,
-            base_snapshot_id=snap.snapshot_id if snap else -1,
-        )
+
+def _merge_cow(
+    spark: SparkSession,
+    table: IceliteTable,
+    view: IceliteTable,
+    winners: DataFrame,
+    snap,
+    files: list[mf.DataFile],
+    key: str,
+    run_id: str,
+    target_file_size: int,
+    timestamp_ms: int | None,
+    branch: str | None,
+    lineage_on: bool,
+) -> dict:
+    """Stats-pruned copy-on-write merge of the deduplicated ``winners``
+    (one row per key) planned on ``view``, committed through ``table``."""
+    base_sid = snap.snapshot_id if snap else None
+    # winners hold one row per key, so one bounded key collect is both the
+    # batch size and the driver-side prune keys; only a batch above the
+    # bound pays a separate count
+    keys = [
+        r[0] for r in winners.select(key).limit(DRIVER_PRUNE_THRESHOLD_ROWS + 1).collect()
+    ]
+    if len(keys) <= DRIVER_PRUNE_THRESHOLD_ROWS:
+        n_updates = len(keys)
+    else:
+        n_updates, keys = winners.count(), None
     # broadcast only where winners participates in a join (anti/overlap);
     # the union side uses the plain plan.
     winners_j = F.broadcast(winners) if n_updates <= BROADCAST_THRESHOLD_ROWS else winners
 
     # 2. stats-based file pruning: range-overlap of update keys against
     # per-file min/max (manifest stats). Two paths:
-    #   - small update set (the common upsert shape): collect the sorted
-    #     distinct keys once and binary-search each file's [min,max] on the
-    #     driver — O(files · log keys), no extra Spark job;
+    #   - small update set (the common upsert shape): binary-search each
+    #     file's [min,max] in the sorted collected keys on the driver —
+    #     O(files · log keys), no extra Spark job;
     #   - huge update set: distributed range-overlap join with the tiny
     #     file-stats side broadcast (keys never move).
     matched_paths: list[str] = []
     prunable = [f for f in files if key in f.lower_bounds and key in f.upper_bounds]
     prunable_paths = {f.path for f in prunable}
     unprunable = [f for f in files if f.path not in prunable_paths]
-    if prunable and n_updates <= DRIVER_PRUNE_THRESHOLD_ROWS:
+    if prunable and keys is not None:
         import bisect
 
-        keys_sorted = sorted(r[0] for r in winners.select(key).distinct().collect())
+        keys_sorted = sorted(keys)
         for f in prunable:
             lo, hi = f.lower_bounds[key], f.upper_bounds[key]
             # NATIVE comparison (stats round-trip JSON with native types);
@@ -159,7 +195,7 @@ def merge_into(
             except TypeError:
                 matched_paths.append(f.path)
     elif prunable:
-        key_dt = table.schema[key].dataType.simpleString()
+        key_dt = view.schema[key].dataType.simpleString()
         try:
             stats_df = spark.createDataFrame(
                 [(f.path, f.lower_bounds[key], f.upper_bounds[key]) for f in prunable],
@@ -182,15 +218,15 @@ def merge_into(
     matched_paths.extend(f.path for f in unprunable)  # no stats → must rewrite
 
     # 3. copy-on-write rewrite of matched files only
-    schema = table.schema
-    seq = table.next_sequence_number()
+    schema = view.schema
+    seq = view.next_sequence_number()
     file_by_path = {f.path: f for f in files}
     matched_bytes = sum(file_by_path[p].file_size_bytes for p in matched_paths)
     n_out = max(1, -(-matched_bytes // target_file_size))
     if lineage_on:
         out_paths, added, rows_out = _merge_cow_lineage(
-            spark, table, winners, winners_j, matched_paths, file_by_path,
-            base_sid, key, seq, n_out, target_file_size, run_id,
+            spark, view, winners, winners_j, n_updates, matched_paths,
+            file_by_path, base_sid, key, seq, n_out, target_file_size, run_id,
             matched_bytes,
         )
     else:
@@ -199,7 +235,7 @@ def merge_into(
             # merge-on-read commit) while reading — rewritten rows must not
             # resurrect. Eq-deletes apply under the key RECORDED when they
             # were written, which may differ from this merge's key.
-            matched_data = table.rewrite_reader(spark, base_sid)(
+            matched_data = view.rewrite_reader(spark, base_sid)(
                 [file_by_path[p] for p in matched_paths]
             )
             unchanged = matched_data.join(winners_j.select(key), key, "left_anti")
@@ -247,7 +283,6 @@ def merge_into(
             output_paths=out_paths,
         )
     )
-    winners.unpersist()
     return {
         "updates": n_updates,
         "files_matched": len(matched_paths),
@@ -261,9 +296,10 @@ def merge_into(
 
 def _merge_cow_lineage(
     spark: SparkSession,
-    table: IceliteTable,
+    view: IceliteTable,
     winners: DataFrame,
     winners_j: DataFrame,
+    n_winners: int,
     matched_paths: list[str],
     file_by_path: dict,
     base_sid: int | None,
@@ -299,9 +335,9 @@ def _merge_cow_lineage(
     the smallest of those rows' ``_row_id``s and the other ids retire."""
     from ..icelite.table import LINEAGE_ROW_ID_COL, LINEAGE_SEQ_COL
 
-    schema = table.schema
+    schema = view.schema
     cols = [f.name for f in schema.fields]
-    matched_data = table.lineage_read(
+    matched_data = view.lineage_read(
         spark, [file_by_path[p] for p in matched_paths], snapshot_id=base_sid
     )
     rid_map = matched_data.groupBy(key).agg(
@@ -318,7 +354,7 @@ def _merge_cow_lineage(
     out_paths: list[str] = []
     added: list[mf.DataFile] = []
     if matched_paths:
-        rw_dir = os.path.join(table.location, "data", f"mg-{run_id}")
+        rw_dir = os.path.join(view.location, "data", f"mg-{run_id}")
         rewritten = unchanged.select(
             *cols, LINEAGE_ROW_ID_COL, LINEAGE_SEQ_COL
         ).unionByName(updated)
@@ -337,9 +373,8 @@ def _merge_cow_lineage(
     # to one file when the table was empty)
     rows_matched = sum(file_by_path[p].record_count for p in matched_paths)
     row_bytes = (matched_bytes / rows_matched) if rows_matched else 256.0
-    ins_dir = os.path.join(table.location, "data", f"mg-{run_id}-ins")
+    ins_dir = os.path.join(view.location, "data", f"mg-{run_id}-ins")
     # upper bound: every winner could be an insert
-    n_winners = winners.count()
     n_ins = max(1, -(-int(n_winners * row_bytes) // target_file_size))
     inserts.repartitionByRange(n_ins, key).write.mode("overwrite").parquet(
         ins_dir
@@ -357,6 +392,7 @@ def _merge_cow_lineage(
 def _merge_bucketed(
     spark: SparkSession,
     table: IceliteTable,
+    view: IceliteTable,
     winners: DataFrame,
     n_updates: int,
     spec: tuple[str, int],
@@ -379,9 +415,9 @@ def _merge_bucketed(
     from ..functions.hashing import bucket_expr
 
     key, n_buckets = spec
-    schema = table.schema
+    schema = view.schema
     cols = [f.name for f in schema.fields]
-    seq = table.next_sequence_number()
+    seq = view.next_sequence_number()
 
     winners_b = winners.withColumn("_b", bucket_expr(key, n_buckets))
     touched = sorted(
@@ -400,7 +436,7 @@ def _merge_bucketed(
 
     # delete-applied read of the planning snapshot: the per-bucket rewrite
     # must not resurrect position-deleted rows
-    read = table.rewrite_reader(spark, base_snapshot_id) if files else None
+    read = view.rewrite_reader(spark, base_snapshot_id) if files else None
 
     def run_one(b: int) -> tuple[int, list[str]]:
         files_b = by_bucket.get(b, [])
@@ -474,7 +510,6 @@ def _merge_bucketed(
         # merge_into); abort if one landed mid-rewrite (same resurrect race)
         validate_no_new_deletes_since=base_snapshot_id,
     )
-    winners.unpersist()
     return {
         "updates": n_updates,
         "buckets_touched": len(touched),
@@ -492,6 +527,7 @@ def _merge_bucketed(
 def _merge_mor(
     spark: SparkSession,
     table: IceliteTable,
+    view: IceliteTable,
     winners: DataFrame,
     n_updates: int,
     key: str,
@@ -507,11 +543,11 @@ def _merge_mor(
     deferred cost lands on readers (mor_scan anti-join) and is retired by
     the next compaction/clustering pass, which materializes the deletes.
     """
-    schema = table.schema
-    seq = table.next_sequence_number()
+    schema = view.schema
+    seq = view.next_sequence_number()
 
     # estimate output sizing from current table stats (bytes/row)
-    data_files = table.data_files()
+    data_files = view.data_files()
     if data_files and sum(f.record_count for f in data_files) > 0:
         row_bytes = sum(f.file_size_bytes for f in data_files) / sum(
             f.record_count for f in data_files
@@ -544,8 +580,8 @@ def _merge_mor(
     # persist the eq-delete key on the table: scans/compactions MUST apply
     # these delete files under this exact column (a later scan defaulting to
     # a different key would read all-null keys and resurrect deleted rows)
-    recorded = table.recorded_merge_key()
-    if recorded is not None and recorded != key and table.delete_files():
+    recorded = view.recorded_merge_key()
+    if recorded is not None and recorded != key and view.delete_files():
         raise ValueError(
             f"merge-on-read with key={key!r} but outstanding eq-delete files "
             f"were written under {recorded!r}; compact first to materialize them"
@@ -574,7 +610,6 @@ def _merge_mor(
             output_paths=out_paths + del_paths,
         )
     )
-    winners.unpersist()
     return {
         "updates": n_updates,
         "files_matched": 0,

@@ -462,30 +462,36 @@ def update_where(
 
     ``strategy=None`` consults the Iceberg ``write.update.mode`` table
     property (copy-on-write → cow, merge-on-read → mor), defaulting to
-    cow."""
+    cow.
+
+    The update plans on one metadata read (``table.pinned()``): write
+    mode, schema, snapshot, candidate files, delete sets and sequence
+    number all come from it, so a commit landing mid-plan (a rename) cannot
+    pair the SET projection with another version's columns."""
+    view = table.pinned()
     if strategy is None:
-        strategy = table.write_mode("update")
+        strategy = view.write_mode("update")
     run_id = run_id or uuid.uuid4().hex[:12]
-    schema = table.schema
+    schema = view.schema
     for c in assignments:
         if c not in schema.fieldNames():
             raise ValueError(f"no column {c!r}")
-    snap = table.current_snapshot()
-    files = table.data_files(snap.snapshot_id) if snap else []
+    snap = view.current_snapshot()
+    files = view.data_files(snap.snapshot_id) if snap else []
     keep = table._where_file_filter(where)
     candidates = [f for f in files if keep(f)]
     if not candidates:
         return {"files_matched": 0, "files_out": 0, "rows_out": 0}
     if strategy == "mor":
         return _update_where_mor(
-            spark, table, where, assignments, candidates,
+            spark, table, view, where, assignments, candidates,
             target_file_size, key, run_id, timestamp_ms, snap.snapshot_id,
         )
     if strategy != "cow":
         raise ValueError(f"unknown update strategy {strategy!r}")
 
-    lineage_on = table.row_lineage_enabled()
-    seq = table.next_sequence_number()
+    lineage_on = view.row_lineage_enabled()
+    seq = view.next_sequence_number()
     pred = predicate_column(where)
     if lineage_on:
         from ..icelite.table import LINEAGE_ROW_ID_COL, LINEAGE_SEQ_COL
@@ -493,7 +499,7 @@ def update_where(
         # v3 row lineage through UPDATE: every row keeps its _row_id; rows
         # the predicate selects get _last_updated_sequence_number bumped to
         # this commit's sequence, untouched rows keep theirs (materialized)
-        data = table.lineage_read(spark, candidates, snap.snapshot_id)
+        data = view.lineage_read(spark, candidates, snap.snapshot_id)
         extra = [
             F.col(LINEAGE_ROW_ID_COL),
             F.when(F.coalesce(pred, F.lit(False)), F.lit(seq))
@@ -501,7 +507,7 @@ def update_where(
             .alias(LINEAGE_SEQ_COL),
         ]
     else:
-        data = table.rewrite_reader(spark, snap.snapshot_id)(candidates)
+        data = view.rewrite_reader(spark, snap.snapshot_id)(candidates)
         extra = []
     # all SET expressions evaluate against the OLD row: select, don't chain
     projected = data.select(
@@ -569,6 +575,7 @@ def update_where(
 def _update_where_mor(
     spark: SparkSession,
     table: IceliteTable,
+    view: IceliteTable,
     where: dict,
     assignments: dict[str, str],
     candidates: list[mf.DataFile],
@@ -601,10 +608,10 @@ def _update_where_mor(
     (path, pos) of OLD files and paths are never reused."""
     from ..icelite.table import POS_IDX_COL, POS_PATH_COL
 
-    schema = table.schema
+    schema = view.schema
     pred = predicate_column(where)
-    lineage_on = table.row_lineage_enabled()
-    new_seq = table.next_sequence_number()
+    lineage_on = view.row_lineage_enabled()
+    new_seq = view.next_sequence_number()
 
     # pass 1: visible matching rows, SET applied against OLD values
     if lineage_on:
@@ -613,13 +620,13 @@ def _update_where_mor(
         # v3 row lineage: the updated copy KEEPS the old image's _row_id
         # and records this commit's sequence as its last update
         # (materialized — appended copies must not consume fresh ids)
-        visible = table.lineage_read(spark, candidates, snapshot_id)
+        visible = view.lineage_read(spark, candidates, snapshot_id)
         extra = [
             F.col(LINEAGE_ROW_ID_COL),
             F.lit(new_seq).cast("long").alias(LINEAGE_SEQ_COL),
         ]
     else:
-        visible = table.rewrite_reader(spark, snapshot_id)(candidates)
+        visible = view.rewrite_reader(spark, snapshot_id)(candidates)
         extra = []
     updated = visible.filter(pred).select(
         *[
@@ -639,7 +646,7 @@ def _update_where_mor(
     # pass 2: position addresses of every matching candidate row (raw read —
     # superset of pass 1, see docstring), (file_path, pos)-sorted sidecar
     addrs = (
-        table.read_files(spark, [f.path for f in candidates], with_positions=True)
+        view.read_files(spark, [f.path for f in candidates], with_positions=True)
         .filter(pred)
         .select(
             F.col(POS_PATH_COL).alias("file_path"),

@@ -45,7 +45,6 @@ def cdc_apply_batch(
     key: str = "doc_id",
     op_col: str = "_op",
     seq_col: str = "_seq",
-    target_file_size: int = 128 * 1024 * 1024,
     set_properties: dict | None = None,
     run_id: str = "cdc",
     trust_inserts: bool = False,
@@ -65,6 +64,14 @@ def cdc_apply_batch(
     Off by default: the safe mode tolerates producers that replay inserts
     for existing keys (treating every ``I`` as an upsert, Iceberg's
     ``write.upsert.enabled`` semantics).
+
+    Output sizing: both outputs are written unconditionally and counted from
+    their Parquet footers, so the apply runs two Spark actions (the two
+    writes) and no count. New images are range-partitioned on ``key`` with
+    no fixed partition count; adaptive execution coalesces the shuffle to
+    its advisory partition size, so a small batch lands in one file and a
+    large one splits at that size. A zero-row output (no upserts, or no
+    delete keys) leaves no file on disk and commits none.
     """
     if table.row_lineage_enabled():
         raise ValueError(
@@ -88,15 +95,8 @@ def cdc_apply_batch(
 
     # new images: ranged by key so batch-local clustering survives to files
     out_dir = os.path.join(table.location, "data", f"cdc-{run_id}")
-    n_rows = upserts.count()
-    n_out = max(1, min(32, n_rows // 100_000 + 1))
-    added: list[mf.DataFile] = []
-    if n_rows:
-        upserts.repartitionByRange(n_out, key).write.mode("overwrite").parquet(
-            out_dir
-        )
-        out_paths = sorted(glob.glob(os.path.join(out_dir, "part-*.parquet")))
-        added = mf.harvest_stats(out_paths)
+    upserts.repartitionByRange(key).write.mode("overwrite").parquet(out_dir)
+    added = _harvest_nonempty(out_dir)
 
     # one eq-delete covering every key whose prior image must die (update
     # old-images + deletes; pure inserts too unless the producer's create
@@ -105,11 +105,10 @@ def cdc_apply_batch(
         winners.filter(F.col(op_col) != OP_INSERT) if trust_inserts else winners
     )
     del_dir = os.path.join(table.location, "data", f"cdc-{run_id}-deletes")
-    dels: list[mf.DataFile] = []
-    if not del_keys.isEmpty():
-        del_keys.select(key).write.mode("overwrite").parquet(del_dir)
-        del_paths = sorted(glob.glob(os.path.join(del_dir, "part-*.parquet")))
-        dels = mf.harvest_stats(del_paths, stat_columns=[key])
+    del_keys.select(key).write.mode("overwrite").parquet(del_dir)
+    dels = _harvest_nonempty(del_dir, stat_columns=[key])
+    n_rows = sum(f.record_count for f in added)
+    n_keys = sum(f.record_count for f in dels)
 
     for s in added:
         s.sequence_number = seq
@@ -133,7 +132,7 @@ def cdc_apply_batch(
         summary={
             "op": "cdc-apply",
             "upserts": str(n_rows),
-            "keys": str(len(dels) and sum(f.record_count for f in dels)),
+            "keys": str(n_keys),
             "run-id": run_id,
         },
         set_properties=props,
@@ -141,8 +140,22 @@ def cdc_apply_batch(
     return {
         "snapshot_id": snap.snapshot_id,
         "upserts": n_rows,
-        "delete_keys": sum(f.record_count for f in dels),
+        "delete_keys": n_keys,
     }
+
+
+def _harvest_nonempty(out_dir: str, stat_columns: list[str] | None = None) -> list[mf.DataFile]:
+    """Stats of the part files Spark wrote to ``out_dir``, minus the
+    zero-row file it writes for an empty input: that one is deleted and
+    never committed."""
+    paths = sorted(glob.glob(os.path.join(out_dir, "part-*.parquet")))
+    kept = []
+    for f in mf.harvest_stats(paths, stat_columns=stat_columns):
+        if f.record_count:
+            kept.append(f)
+        else:
+            os.remove(f.path)
+    return kept
 
 
 def stream_cdc_apply(

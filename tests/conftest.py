@@ -41,3 +41,17 @@ def sequences_table(spark, warehouse):
         part = df.filter(df.doc_id.cast("long") % 5 == i)
         tbl.append(part, max_records_per_file=32, timestamp_ms=1_000_000 + i * 60_000)
     return tbl
+
+
+def record_actions(spark, monkeypatch, names=("count", "isEmpty")) -> list[str]:
+    """Record every call of the named DataFrame actions (on the session's
+    concrete DataFrame class, which overrides the abstract one)."""
+    cls = type(spark.range(0))
+    calls: list[str] = []
+    for name in names:
+        real = getattr(cls, name)
+        monkeypatch.setattr(
+            cls, name,
+            lambda self, *a, _real=real, _n=name, **k: calls.append(_n) or _real(self, *a, **k),
+        )
+    return calls

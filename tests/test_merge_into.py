@@ -10,7 +10,7 @@ from pyspark.sql import functions as F
 from lakehouse_benchmark_ingestion_spark.operators.compaction import compact
 from lakehouse_benchmark_ingestion_spark.operators.merge_into import merge_into
 from lakehouse_benchmark_ingestion_spark.sources.tokens import tokens_df, updates_df
-from tests.conftest import SF_SMOKE
+from tests.conftest import SF_SMOKE, record_actions
 
 
 def _pandas_merge(base: pd.DataFrame, upd: pd.DataFrame) -> pd.DataFrame:
@@ -100,3 +100,37 @@ def test_merge_is_snapshot_isolated(spark, merged_table):
     pre_count = tbl.scan(spark).count()
     merge_into(spark, tbl, updates_df(spark, SF_SMOKE))
     assert tbl.scan(spark, snapshot_id=pre).count() == pre_count
+
+
+def test_cow_merge_runs_no_count_under_the_prune_bound(spark, merged_table, monkeypatch):
+    """Below DRIVER_PRUNE_THRESHOLD_ROWS one bounded key collect is both
+    the batch size and the prune keys: the COW merge runs no count."""
+    tbl = merged_table
+    upd = updates_df(spark, SF_SMOKE)
+    n_keys = upd.select("doc_id").distinct().count()
+    calls = record_actions(spark, monkeypatch)
+    res = merge_into(spark, tbl, upd, strategy="cow")
+    monkeypatch.undo()
+    assert calls == []
+    assert res["updates"] == n_keys
+
+
+def test_failed_cow_merge_frees_its_cached_batch(spark, merged_table, monkeypatch):
+    """A commit that raises must not leave the deduplicated batch cached
+    for the rest of the session."""
+    from lakehouse_benchmark_ingestion_spark.icelite import metadata as md
+    from lakehouse_benchmark_ingestion_spark.icelite.table import IceliteTable
+
+    tbl = merged_table
+    spark.catalog.clearCache()
+    cache = spark._jsparkSession.sharedState().cacheManager()
+
+    def refuse(self, *args, **kwargs):
+        assert not cache.isEmpty(), "the batch is cached while the merge runs"
+        raise md.ValidationFailed("refused")
+
+    monkeypatch.setattr(IceliteTable, "replace_files", refuse)
+    with pytest.raises(md.ValidationFailed):
+        merge_into(spark, tbl, updates_df(spark, SF_SMOKE), strategy="cow")
+    monkeypatch.undo()
+    assert cache.isEmpty()

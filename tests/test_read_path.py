@@ -152,3 +152,48 @@ def test_scan_build_reads_the_metadata_once(spark, sequences_table, monkeypatch)
     delete_where(spark, tbl, {"n_tok": (10, 12)}, strategy="mor-pos")
     assert tbl.delete_files() and tbl.pos_delete_files()
     assert reads_per_build() == 1
+
+
+def test_cow_update_keeps_its_schema_when_a_rename_commits_mid_plan(
+    spark, sequences_table, monkeypatch
+):
+    """A rename that commits while a COW ``update_where`` builds its
+    delete-applied read must not pair the SET projection with the renamed
+    reader columns: the update plans on one metadata read, commits, and
+    every row keeps its ``source`` value under the new name."""
+    from pyspark.sql import functions as F
+
+    from lakehouse_benchmark_ingestion_spark.icelite.table import IceliteTable
+    from lakehouse_benchmark_ingestion_spark.operators.row_dml import update_where
+
+    tbl = sequences_table
+    before = {
+        r.doc_id: (r.n_tok, r.source)
+        for r in tbl.scan(spark).select("doc_id", "n_tok", "source").collect()
+    }
+    where = {"n_tok": (10, 20)}
+    hit = {d for d, (n, _) in before.items() if 10 <= n <= 20}
+    assert hit
+
+    real = IceliteTable.rewrite_reader
+    fired = []
+
+    def rename_then_read(self, *args, **kwargs):
+        if not fired:
+            fired.append(True)
+            tbl.rename_column("source", "source2")
+        return real(self, *args, **kwargs)
+
+    monkeypatch.setattr(IceliteTable, "rewrite_reader", rename_then_read)
+    res = update_where(spark, tbl, where, {"n_tok": "n_tok + 1"}, strategy="cow")
+    monkeypatch.undo()
+    assert fired and res["files_matched"] > 0
+    assert tbl.current_snapshot().snapshot_id == res["snapshot_id"]
+
+    after = {
+        r.doc_id: (r.n_tok, r.source2)
+        for r in tbl.scan(spark).select("doc_id", "n_tok", F.col("source2")).collect()
+    }
+    assert after == {
+        d: (n + 1 if d in hit else n, src) for d, (n, src) in before.items()
+    }

@@ -21,7 +21,7 @@ from lakehouse_benchmark_ingestion_spark.streaming.cdc import (
     cdc_apply_batch,
     stream_cdc_apply,
 )
-from tests.conftest import SF_SMOKE
+from tests.conftest import SF_SMOKE, record_actions
 
 COLS = ["doc_id", "tokens", "n_tok", "source"]
 
@@ -154,3 +154,73 @@ def test_cdc_trust_inserts_same_state_fewer_delete_keys(spark, warehouse, tmp_pa
     n5 = docs.filter(F.col("doc_id") % 5 == 0).count()
     del_rows = sum(f.record_count for f in tbl.delete_files())
     assert del_rows == n3 + n5
+
+
+def _cdc_batch(df, op: str):
+    return df.withColumn("_op", F.lit(op)).withColumn("_seq", F.lit(1).cast("long"))
+
+
+def test_cdc_apply_runs_no_count_or_emptiness_action(spark, warehouse, monkeypatch):
+    """A checkpoint-sized batch pays for its two writes only: the upsert
+    and delete-key counts come from the written files' footers."""
+    base = tokens_df(spark, SF_SMOKE)
+    tbl = Catalog(warehouse).create_table("cdc6", base.schema)
+    tbl.append(base, num_files=2)
+    ups = base.filter(F.col("doc_id").cast("long") % 25 == 0)
+    dels = ups.filter(F.col("doc_id").cast("long") % 50 == 0)
+    batch = _cdc_batch(ups, "U").unionByName(
+        _cdc_batch(dels, "D").withColumn("_seq", F.lit(2).cast("long"))
+    )
+    n_keys, n_dels = ups.count(), dels.count()
+    assert 0 < n_dels < n_keys
+
+    calls = record_actions(spark, monkeypatch)
+    res = cdc_apply_batch(spark, tbl, batch, run_id="guard")
+    monkeypatch.undo()
+    assert calls == []
+    assert res == {**res, "upserts": n_keys - n_dels, "delete_keys": n_keys}
+    # a checkpoint-sized batch is one new data file and one delete file
+    cdc_files = [f for f in tbl.all_files() if "/cdc-guard" in f.path]
+    assert len(cdc_files) == 2
+
+
+def _zero_row_parquet_files(location: str) -> list[str]:
+    import glob
+
+    import pyarrow.parquet as pq
+
+    paths = glob.glob(f"{location}/data/**/*.parquet", recursive=True)
+    return [p for p in paths if pq.ParquetFile(p).metadata.num_rows == 0]
+
+
+def test_cdc_empty_outputs_commit_and_leave_no_file(spark, warehouse):
+    """An all-delete batch commits no data file and an all-insert batch
+    under ``trust_inserts`` commits no delete file; the zero-row Parquet
+    file Spark writes for an empty output is neither committed nor left
+    on disk."""
+    from lakehouse_benchmark_ingestion_spark.operators.validate import validate_table
+
+    base = tokens_df(spark, SF_SMOKE)
+    tbl = Catalog(warehouse).create_table("cdc7", base.schema)
+    tbl.append(base, num_files=2)
+    n_base = base.count()
+
+    gone = base.filter(F.col("doc_id").cast("long") % 50 == 0)
+    n_gone = gone.count()
+    res = cdc_apply_batch(spark, tbl, _cdc_batch(gone, "D"), run_id="dels")
+    assert res == {**res, "upserts": 0, "delete_keys": n_gone}
+    added = [f.path for f in tbl.all_files() if "/cdc-dels" in f.path]
+    assert len(added) == 1 and added[0] in {f.path for f in tbl.delete_files()}
+
+    new = base.limit(5).withColumn("doc_id", F.concat(F.lit("zz-"), F.col("doc_id")))
+    res = cdc_apply_batch(
+        spark, tbl, _cdc_batch(new, "I"), run_id="ins", trust_inserts=True
+    )
+    assert res == {**res, "upserts": 5, "delete_keys": 0}
+    added = [f.path for f in tbl.all_files() if "/cdc-ins" in f.path]
+    assert len(added) == 1 and added[0] in {f.path for f in tbl.data_files()}
+
+    assert _zero_row_parquet_files(tbl.location) == []
+    assert tbl.scan(spark).count() == n_base - n_gone + 5
+    report = validate_table(spark, tbl, deep=True)
+    assert report["ok"], report["issues"]

@@ -103,3 +103,31 @@ def test_cluster_key_deterministic(spark):
     a = with_cluster_key(df).orderBy("doc_id").select("_ckey").collect()
     b = with_cluster_key(df).orderBy("doc_id").select("_ckey").collect()
     assert a == b
+
+
+def test_sql_morton_key_equals_pandas_reference(spark):
+    """The Catalyst Morton key equals the numpy reference UDF bit for bit,
+    including n_tok at and above the 21-bit clamp and a frame whose
+    ``source`` column is missing (that dimension degrades to 0)."""
+    from pyspark.sql import functions as F
+
+    from lakehouse_benchmark_ingestion_spark.functions.zorder import with_cluster_key
+
+    n = 20_000
+    df = spark.range(n).select(
+        F.col("id"),
+        F.col("id").cast("string").alias("doc_id"),
+        # spans [0, 2^22): half the rows sit above the 2^21 - 1 clamp
+        ((F.col("id") * 7919) % (1 << 22)).cast("int").alias("n_tok"),
+        F.concat(F.lit("src"), (F.col("id") % 13).cast("string")).alias("source"),
+    )
+    assert df.filter(F.col("n_tok") >= (1 << BITS)).count() > n // 3
+    for frame in (df, df.drop("source")):
+        sql = with_cluster_key(frame).select("id", F.col("_ckey").alias("a"))
+        ref = with_cluster_key(frame, impl="pandas").select(
+            "id", F.col("_ckey").alias("b")
+        )
+        both = sql.join(ref, "id")
+        assert both.count() == n
+        assert both.filter(F.col("a") != F.col("b")).count() == 0
+        assert both.agg(F.countDistinct("a")).first()[0] > n * 0.9
