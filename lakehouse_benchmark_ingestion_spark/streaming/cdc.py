@@ -27,7 +27,7 @@ from __future__ import annotations
 import glob
 import os
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, Observation, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..icelite import manifest as mf
@@ -65,13 +65,13 @@ def cdc_apply_batch(
     for existing keys (treating every ``I`` as an upsert, Iceberg's
     ``write.upsert.enabled`` semantics).
 
-    Output sizing: both outputs are written unconditionally and counted from
-    their Parquet footers, so the apply runs two Spark actions (the two
-    writes) and no count. New images are range-partitioned on ``key`` with
-    no fixed partition count; adaptive execution coalesces the shuffle to
-    its advisory partition size, so a small batch lands in one file and a
-    large one splits at that size. A zero-row output (no upserts, or no
-    delete keys) leaves no file on disk and commits none.
+    Output sizing: the apply runs two Spark actions, the two writes, and
+    no count. The delete keys are written first; the same job observes how
+    many winners are upserts (``DataFrame.observe``, no extra job), and the
+    new images are then range-partitioned on ``key`` into one file per 100k
+    upserts, at most 32. Both counts in the result come from the written
+    files' footers. A batch with no upserts skips the image write; a batch
+    with no delete keys leaves no file on disk and commits none.
     """
     if table.row_lineage_enabled():
         raise ValueError(
@@ -93,22 +93,34 @@ def cdc_apply_batch(
 
     seq = table.next_sequence_number()
 
-    # new images: ranged by key so batch-local clustering survives to files
-    out_dir = os.path.join(table.location, "data", f"cdc-{run_id}")
-    upserts.repartitionByRange(key).write.mode("overwrite").parquet(out_dir)
-    added = _harvest_nonempty(out_dir)
-
     # one eq-delete covering every key whose prior image must die (update
     # old-images + deletes; pure inserts too unless the producer's create
-    # events are trusted to be genuinely new keys)
+    # events are trusted to be genuinely new keys). Its write also counts
+    # the upserts, which sizes the image write below.
+    obs = Observation()
+    winners = winners.observe(
+        obs, F.count(F.when(F.col(op_col) != OP_DELETE, 1)).alias("upserts")
+    )
     del_keys = (
         winners.filter(F.col(op_col) != OP_INSERT) if trust_inserts else winners
     )
     del_dir = os.path.join(table.location, "data", f"cdc-{run_id}-deletes")
     del_keys.select(key).write.mode("overwrite").parquet(del_dir)
     dels = _harvest_nonempty(del_dir, stat_columns=[key])
-    n_rows = sum(f.record_count for f in added)
     n_keys = sum(f.record_count for f in dels)
+
+    # new images: ranged by key so batch-local clustering survives to files
+    out_dir = os.path.join(table.location, "data", f"cdc-{run_id}")
+    n_upserts = obs.get["upserts"]
+    added: list[mf.DataFile] = []
+    if n_upserts:
+        n_out = min(32, n_upserts // 100_000 + 1)
+        upserts.repartitionByRange(n_out, key).write.mode("overwrite").parquet(
+            out_dir
+        )
+        out_paths = sorted(glob.glob(os.path.join(out_dir, "part-*.parquet")))
+        added = mf.harvest_stats(out_paths)
+    n_rows = sum(f.record_count for f in added)
 
     for s in added:
         s.sequence_number = seq

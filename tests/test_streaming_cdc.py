@@ -224,3 +224,23 @@ def test_cdc_empty_outputs_commit_and_leave_no_file(spark, warehouse):
     assert tbl.scan(spark).count() == n_base - n_gone + 5
     report = validate_table(spark, tbl, deep=True)
     assert report["ok"], report["issues"]
+
+
+def test_cdc_large_batch_keeps_one_image_file_per_100k_upserts(spark, warehouse):
+    """A multi-MB batch lands in one new-image file per 100k upserts: the
+    upsert count observed by the delete write sizes the range shuffle, so
+    adaptive execution does not split it into megabyte-sized files."""
+    batch = spark.range(120_000).select(
+        F.format_string("k%07d", F.col("id")).alias("doc_id"),
+        F.sha2(F.col("id").cast("string"), 256).alias("payload"),
+        F.when(F.col("id") % 50 == 0, "D").otherwise("U").alias("_op"),
+        F.lit(1).cast("long").alias("_seq"),
+    )
+    tbl = Catalog(warehouse).create_table(
+        "cdc8", batch.drop("_op", "_seq").schema
+    )
+    res = cdc_apply_batch(spark, tbl, batch, run_id="big")
+    assert res == {**res, "upserts": 117_600, "delete_keys": 120_000}
+    images = [f for f in tbl.data_files() if "/cdc-big/" in f.path]
+    assert len(images) == 2
+    assert sum(f.record_count for f in images) == 117_600
